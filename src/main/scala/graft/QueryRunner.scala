@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ohlcv
-import graft.sources.ZTable
+import graft.sources.{Parquet, ZTable}
 
 /** S9: the remote query surface, as a JSON request runner — the
   * lifecycle-parity analog of the reference's HTTP server
@@ -87,7 +87,7 @@ object QueryRunner {
         SqlGate.run(spark, str("query"), tables)
       case "index" => // build an inverted text index from a document table
         graft.operators.InvertedIndex.build(
-          spark.read.parquet(str("docs")),
+          Parquet.read(spark, str("docs")),
           strOpt("id").getOrElse("doc_id"), strOpt("text").getOrElse("text"),
           str("index"),
           numBuckets = req.get("buckets")
@@ -98,19 +98,19 @@ object QueryRunner {
         if (list("cols").isEmpty) df else df.select(list("cols").map(col): _*)
       case "analyze" => // one-pass data profile (C3 describe -> data stats)
         graft.operators.Profile.profile(
-          strOpt("docs").map(spark.read.parquet(_)).getOrElse(table.df))
+          strOpt("docs").map(Parquet.read(spark, _)).getOrElse(table.df))
       case "search" => // BM25 over a built index
         graft.operators.InvertedIndex.search(spark, str("index"),
           list("terms"),
           k = req.get("k").collect { case n: Number => n.intValue }.getOrElse(10))
       case "dup_spans" => // ExactSubstr span dedup over a document table
         graft.operators.Dedup.dupSpans(
-          spark.read.parquet(str("docs")),
+          Parquet.read(spark, str("docs")),
           strOpt("id").getOrElse("doc_id"), strOpt("text").getOrElse("text"),
           k = req.get("k").collect { case n: Number => n.intValue }.getOrElse(8))
           .orderBy("id")
       case "split" => // leakage-free train/val/test split (pipe8)
-        val docs = spark.read.parquet(str("docs"))
+        val docs = Parquet.read(spark, str("docs"))
         val idc = strOpt("id").getOrElse("doc_id")
         val txt = strOpt("text").getOrElse("text")
         // components() pins its fixpoint via localCheckpoint (r12) —
@@ -145,7 +145,7 @@ object QueryRunner {
         // real graphs; 100 is generous headroom, not a tuning limit)
         require(iters >= 0 && iters <= 100,
           s"pagerank: iters must be in [0, 100], got $iters")
-        val edges = spark.read.parquet(str("edges")).select(
+        val edges = Parquet.read(spark, str("edges")).select(
           col(strOpt("src").getOrElse("src")).as("src"),
           col(strOpt("dst").getOrElse("dst")).as("dst"))
         // Serving default is pinResult = true: repeated short-run calls
@@ -213,11 +213,11 @@ object QueryRunner {
         spark.range(1).select(lit(n).as("rows_deleted"))
       case "merge" => // upsert a parquet delta by key columns
         val (replaced, written) =
-          table.merge(spark.read.parquet(str("source")), list("keys"))
+          table.merge(Parquet.read(spark, str("source")), list("keys"))
         spark.range(1).select(lit(replaced).as("rows_replaced"),
           lit(written).as("rows_written"))
       case "check" => // declarative data-quality expectations (dq1, generic)
-        val df = strOpt("docs").map(spark.read.parquet(_)).getOrElse(table.df)
+        val df = strOpt("docs").map(Parquet.read(spark, _)).getOrElse(table.df)
         val uniq = list("unique").map(c =>
           s"unique:$c" -> (count(lit(1)) - count_distinct(col(c))))
         val nn = list("notNull").map(c =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, LogicalPlan, ParsedStatement, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.sources.ZTable
+import graft.sources.{Parquet, ZTable}
 
 /** The serving face's universal query door: read-only ANSI SQL over an
   * EXPLICIT table set — the Spark-native answer to the reference's
@@ -99,7 +99,7 @@ object SqlGate {
       val df =
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_meta.json")))
           ZTable.open(spark, path).df
-        else spark.read.parquet(path)
+        else Parquet.read(spark, path)
       df.queryExecution.logical
     })
     // CTE bodies are NOT tree children of UnresolvedWith (innerChildren

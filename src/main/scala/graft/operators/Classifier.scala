@@ -65,8 +65,6 @@ object Classifier {
       .select(col("id"), VectorOps.sparseFill(col("e"), buckets).as("feats"))
   }
 
-  /** Mean binary cross-entropy of σ(w·x) against a 0/1 label column —
-    * one scan, clamped away from log(0). */
   /** Mean log-loss as a COLUMN aggregate — so callers computing several
     * statistics of one frame fold them into a single pass (guide §5:
     * the ml1/ml2 evaluation jobs were serial full scans per statistic). */
@@ -76,6 +74,8 @@ object Classifier {
     avg(-(labelCol * log(p) + (lit(1.0) - labelCol) * log(lit(1.0) - p)))
   }
 
+  /** Mean binary cross-entropy of σ(w·x) against a 0/1 label column —
+    * one scan, clamped away from log(0). */
   def logLoss(df: DataFrame, featCol: String, labelCol: String,
       w: Array[Double]): Double =
     df.select(logLossExpr(col(featCol), col(labelCol), w))

@@ -68,9 +68,13 @@ object Dedup {
     // Catalyst scales by projected-column default widths and filter
     // selectivity, so a projected/filtered frame over a wide table
     // could estimate under 4 MB while holding far more text and
-    // silently skip the widening the ×100 stress path exists for. Any
-    // leaf that is not a file scan or in-memory literal rows makes the
-    // gate fall through to the exact pass (conservative).
+    // silently skip the widening the ×100 stress path exists for. A
+    // cached leaf counts only once its column buffers are MATERIALIZED:
+    // then the cache's accumulated byte size is exact (columnar cache
+    // compression is lighter than parquet's, so the 4 MB gate stays
+    // conservative); before that its stats are the optimizer estimate
+    // above. Any other leaf makes the gate fall through to the exact
+    // pass (conservative).
     val leafBytes = docs.queryExecution.optimizedPlan.collectLeaves().map {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -80,6 +84,9 @@ object Dedup {
         }
       case loc: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         Some(loc.stats.sizeInBytes) // exact: literal in-memory rows
+      case im: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if im.cacheBuilder.isCachedColumnBuffersLoaded =>
+        Some(BigInt(im.cacheBuilder.sizeInBytesStats.value.longValue))
       case _ => None
     }
     if (leafBytes.nonEmpty && leafBytes.forall(_.isDefined) &&

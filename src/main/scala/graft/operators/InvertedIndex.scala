@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.Parquet
+
 /** Persisted inverted text index: the build-once / query-many half of
   * keyword retrieval — the text analog of [[IvfIndex]].
   *
@@ -84,7 +86,7 @@ object InvertedIndex {
     val buckets = Files.readString(Paths.get(path, "_stats.json"))
     val nb = """"buckets":(\d+)""".r.findFirstMatchIn(buckets).get.group(1).toInt
     val bkts = terms.map(t => termBucket(t, nb)).distinct
-    val scan = spark.read.parquet(path)
+    val scan = Parquet.read(spark, path)
       .where(col("bkt").isin(bkts: _*))
     def postings(t: String) =
       scan.where(col("term") === t).select(col("doc_id"), col("positions"))
@@ -118,7 +120,7 @@ object InvertedIndex {
     val avglen = field("avglen").toDouble
     val numBuckets = field("buckets").toInt
     val bkts = terms.map(termBucket(_, numBuckets)).distinct
-    val posts = spark.read.parquet(path)
+    val posts = Parquet.read(spark, path)
       .where(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
     val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // identical operation order to SearchQueries.bm25's per-term score

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.VectorOps
+import graft.sources.Parquet
 
 /** Persisted IVF index: the build-once / probe-many half of ANN serving.
   *
@@ -247,7 +248,7 @@ object IvfIndex {
   private[graft] def scanCells(spark: SparkSession, path: String,
       probed: Array[Long], queryVec: Array[Double], qnorm: Double, k: Int,
       excludeId: Option[Long], filter: Option[Column] = None): DataFrame = {
-    val probedScan = spark.read.parquet(path)
+    val probedScan = Parquet.read(spark, path)
       .where(col("cell").isin(probed.toIndexedSeq: _*))
     val metaFiltered = filter.fold(probedScan)(probedScan.where)
     val filtered = excludeId.fold(metaFiltered)(x => metaFiltered.where(col("id") =!= x))
@@ -420,7 +421,7 @@ object IvfIndex {
       idCol: String, vecCol: String, queryId: Long, k: Int, candidates: Int,
       qv: Array[Double], probed: Array[Long]): DataFrame = {
     val model = Pq.load(Paths.get(path, "_pq.json"))
-    val cand = spark.read.parquet(path)
+    val cand = Parquet.read(spark, path)
       .where(col("cell").isin(probed.toIndexedSeq: _*))
       .where(col("id") =!= queryId)
       .select(col("id"), Pq.adcCosine(col("pq_codes"), model, qv).as("acos"))

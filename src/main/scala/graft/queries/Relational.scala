@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.sources.Parquet
 import graft.util.Dec._
 
 /** The relational surface the reference lacks entirely (SURVEY.md §2.3
@@ -506,7 +507,7 @@ object Relational {
     * broadcast join with the fixture; AggSpec re-derives the exact
     * counts independently at spec SFs so the fixture itself is checked. */
   def approxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val truth = spark.read.parquet(SimilarityQueries.cachedArtifact(
+    val truth = Parquet.read(spark, SimilarityQueries.cachedArtifact(
       dir, "a11-exact", "a11truth", file = "lineitem.parquet") { tmp =>
       Tables.lineitem(spark, dir)
         .groupBy(col("l_returnflag"))

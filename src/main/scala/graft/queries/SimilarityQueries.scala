@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Parquet
 import graft.operators.Similarity
 
 /** Similarity-search queries over `embeddings` (Array[Float], dim 64).
@@ -359,7 +360,7 @@ object SimilarityQueries {
   }
 
   private def truthPairs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(cachedArtifact(dir, "thr=0.3", "truthpairs") { tmp =>
+    Parquet.read(spark, cachedArtifact(dir, "thr=0.3", "truthpairs") { tmp =>
       Similarity.cosinePairs(Tables.embeddings(spark, dir),
           "vec_id", "embedding", threshold = 0.3)
         .select(col("ida"), col("idb"))
@@ -405,7 +406,7 @@ object SimilarityQueries {
         .select(col("qid"), col("id"))
         .write.mode("overwrite").parquet(tmp)
     }
-    val truth = spark.read.parquet(truthPath).collect()
+    val truth = Parquet.read(spark, truthPath).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).toSet }
     // panel query vectors: |panel| rows to the driver, dimension-sized

@@ -45,7 +45,7 @@ class JoinView(val spark: SparkSession, val path: String,
       val s = Files.list(p)
       try s.iterator().hasNext finally s.close()
     }
-    if (hasData) spark.read.parquet(dir(name)) else like.limit(0)
+    if (hasData) Parquet.read(spark, dir(name)) else like.limit(0)
   }
 
   /** Fold one batch pair into the view. Either side may be empty.
@@ -77,9 +77,11 @@ class JoinView(val spark: SparkSession, val path: String,
     // the first one's tail). Crash story unchanged: replay excludes the
     // current tag from BOTH accumulations and dynamic-overwrites each
     // store, so any prefix of {left, right} landing before a crash is
-    // recomputed identically.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    // recomputed identically. Both writes are awaited before the first
+    // failure is rethrown: an in-process caller that catches and retries
+    // the same tag must not race a sibling write still committing into
+    // its store.
+    import scala.concurrent.{ExecutionContext, Future}
     implicit val ec: ExecutionContext = ExecutionContext.global
     val writes = Seq(dl -> "left", dr -> "right").map { case (df, store) =>
       Future {
@@ -88,9 +90,9 @@ class JoinView(val spark: SparkSession, val path: String,
           .save(dir(store))
       }
     }
-    writes.foreach(Await.result(_, Duration.Inf))
+    ZTable.awaitAll(writes)
   }
 
   /** The maintained view (all accumulated delta partitions). */
-  def read(): DataFrame = spark.read.parquet(dir("view")).drop("delta")
+  def read(): DataFrame = Parquet.read(spark, dir("view")).drop("delta")
 }

@@ -88,7 +88,7 @@ class RollupTable(val spark: SparkSession, val path: String,
   /** Merge-on-read: re-aggregate the stored partials (delta-sized). */
   def read(): DataFrame = {
     maybeRecover()
-    normalize(spark.read.parquet(path)
+    normalize(Parquet.read(spark, path)
       .groupBy(col("bucket") +: dims.map(col): _*)
       .agg(sum(col("n")).as("n"), sum(col("sum_val")).as("sum_val")))
   }

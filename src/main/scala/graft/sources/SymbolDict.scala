@@ -28,7 +28,7 @@ class SymbolDictionary(val spark: SparkSession, val path: String) {
     java.nio.file.Files.exists(java.nio.file.Paths.get(path))
 
   /** The mapping: (sym string, sym_id long), dense from 1. */
-  def df: DataFrame = spark.read.parquet(path)
+  def df: DataFrame = Parquet.read(spark, path)
 
   /** Dense ids starting at `offset + 1` in lexicographic sym order —
     * a distributed sort + zipWithIndex, NOT a single-partition window:

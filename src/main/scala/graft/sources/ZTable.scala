@@ -127,18 +127,23 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
 
   private val swapSuffixes = Seq(".compacting", ".deleting", ".merging", ".retiring")
 
-  /** Read-path guard: a crash between [[swapIn]]'s renames leaves
-    * `p_date=X.retiring` / staging dirs that Spark partition discovery
-    * would parse as partition VALUES — double-counting (debris beside a
-    * live target) or silently dropping (mid-swap) that partition's rows.
-    * Reads check the root listing (one cheap ls) and only take the
-    * mutation lock when debris exists — so a read during a live rewrite
-    * waits for it to finish and then finds nothing to recover. */
-  private def maybeRecover(): Unit = {
-    val root = Paths.get(path)
-    if (Files.exists(root) && lsDir(root).exists(d =>
-        swapSuffixes.exists(d.getFileName.toString.endsWith)))
-      mutate { recoverSwaps() }
+  /** Read-path open: the table's files as a frame (partition column
+    * included), or None when no write has landed. A crash between
+    * [[swapIn]]'s renames leaves `p_date=X.retiring` / staging dirs that
+    * Spark partition discovery would parse as partition VALUES —
+    * double-counting (debris beside a live target) or silently dropping
+    * (mid-swap) that partition's rows. Reads check the root listing and
+    * only take the mutation lock when debris exists — so a read during a
+    * live rewrite waits for it to finish and then finds nothing to
+    * recover. The same listing answers [[hasData]] and starts the
+    * footer lookup of [[Parquet]], so opening costs one root ls, one
+    * partition ls and one footer read — no Spark job. */
+  private def openFiles(): Option[DataFrame] = {
+    val ls = Parquet.listing(spark, path)
+    val root =
+      if (!ls.exists(f => swapSuffixes.exists(f.getPath.getName.endsWith))) ls
+      else { mutate { recoverSwaps() }; Parquet.listing(spark, path) }
+    if (hasData(root)) Some(Parquet.readListed(spark, path, root)) else None
   }
 
   /** Two-RENAME partition swap shared by every copy-on-write rewrite
@@ -184,22 +189,6 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       val target = r.resolveSibling(r.getFileName.toString.stripSuffix(".retiring"))
       if (Files.exists(target)) rmTree(r) else Files.move(r, target)
     }
-  }
-
-  /** Await EVERY concurrent rewrite job — even after one fails — and
-    * only then propagate the first failure. A fail-fast
-    * `Await(Future.sequence)` returns (and `mutate` releases the table
-    * locks) while sibling Futures are still writing and swapping;
-    * another process's entry recovery would then sweep their live
-    * staging dirs as debris mid-write. */
-  private[graft] def awaitAll[T](jobs: Seq[scala.concurrent.Future[T]])(
-      implicit ec: scala.concurrent.ExecutionContext): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val settled = Await.result(
-      Future.sequence(jobs.map(_.transform(t => scala.util.Success(t)))),
-      Duration.Inf)
-    settled.foreach(_.get)
   }
 
   /** A rewrite that removed every row leaves an empty partition behind —
@@ -308,7 +297,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       val expected: Option[Seq[String]] =
         recordedSchema.map(_.fieldNames.toSeq).orElse(
           if (hasData)
-            Some(spark.read.parquet(path).drop(partCol).schema.fieldNames.toSeq)
+            Some(Parquet.read(spark, path).drop(partCol).schema.fieldNames.toSeq)
           else None)
       expected.foreach { exp =>
         val expSet = exp.map(_.toLowerCase).toSet
@@ -365,15 +354,13 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
 
   /** True once at least one write landed (partition dirs or parquet files
     * exist — a fresh table is just its `_meta.json`). */
-  def hasData: Boolean = {
-    val p = Paths.get(path)
-    Files.exists(p) && {
-      val s = Files.list(p)
-      try s.anyMatch(f => f.getFileName.toString.startsWith(partCol + "=") ||
-          f.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
+  def hasData: Boolean = hasData(Parquet.listing(spark, path))
+
+  private def hasData(root: Seq[org.apache.hadoop.fs.FileStatus]): Boolean =
+    root.exists { f =>
+      val n = f.getPath.getName
+      n.startsWith(partCol + "=") || n.endsWith(".parquet")
     }
-  }
 
   /** The recorded DATA-column schema from `_meta.json` — the reference
     * persists its column schema in table meta (reference
@@ -431,25 +418,19 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     case None => spark.emptyDataFrame
   }
 
-  def df: DataFrame = {
-    maybeRecover()
-    if (hasData) spark.read.parquet(path).drop(partCol)
-    else emptyFrame
-  }
+  def df: DataFrame = openFiles().fold(emptyFrame)(_.drop(partCol))
 
   /** Time-range scan, inclusive bounds (reference `src/table/scan.rs:62-88`).
     * Adds the derived partition predicate so users filtering only on ts
     * still get directory pruning (SURVEY.md §4), plus the ts predicate
     * that reaches row-group stats. */
   def scan(fromTs: String, toTs: String, cols: Seq[String] = Nil): DataFrame = {
-    maybeRecover()
-    if (!hasData) {
+    val base = openFiles().getOrElse {
       // empty table: serve the recorded schema (no partition dirs to
       // prune, no files to range-filter — the predicates are no-ops)
       val e = emptyFrame
       return if (cols.isEmpty) e else e.select(cols.map(col): _*)
     }
-    val base = spark.read.parquet(path)
     val from = lit(fromTs).cast(TimestampType)
     val to = lit(toTs).cast(TimestampType)
     val pruned = spec.partitionBy.fmt match {
@@ -496,8 +477,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     * `scripts/convert_col.jl:28-60` rewrites a column file across all
     * partitions; here it's a single declarative cast + rewrite). */
   def migrateColumn(colName: String, newType: String, outPath: String): ZTable = {
-    maybeRecover()
-    if (!hasData) {
+    val source = openFiles().getOrElse {
       // empty source: the migration is pure metadata — carry the
       // recorded schema across with the one column retyped. The column
       // must EXIST in it: the non-empty path fails analysis on a typo'd
@@ -517,7 +497,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       return ZTable.create(spark, outPath, spec, migratedSchema)
     }
     val out = ZTable.create(spark, outPath, spec)
-    val migrated = spark.read.parquet(path)
+    val migrated = source
       .withColumn(colName, col(colName).cast(newType))
     migrated
       // partCol first — see append: the dynamic-partition writer's own
@@ -571,7 +551,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       // partition has data. The recorded meta schema answers without
       // any file listing/footer inference when stamped (r14 — it is
       // normalized to exactly what a parquet read presents).
-      val schema = recordedSchema.getOrElse(spark.read.parquet(path).schema)
+      val schema = recordedSchema.getOrElse(Parquet.read(spark, path).schema)
       keys.map { k =>
         k -> (schema(k).dataType match {
           case _: NumericType => Some(col(k).cast("double"))
@@ -585,7 +565,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       val statCols = keys.flatMap(k => linearCol(k).map(c =>
         Seq(min(c).as(s"lo_$k"), max(c).as(s"hi_$k")))).flatten
       if (statCols.isEmpty) Map.empty
-      else spark.read.parquet(path)
+      else Parquet.read(spark, path)
         .groupBy(partKeyStr.as("p__"))
         .agg(statCols.head, statCols.tail: _*)
         .collect().map(r => r.getAs[String]("p__") -> r).toMap
@@ -638,7 +618,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       val names = decisions.map(_._2).toSet
       val stage = root.resolve(s".compact-stage-${ProcessHandle.current.pid}")
       try {
-        val base = spark.read.parquet(path)
+        val base = Parquet.read(spark, path)
           .where(partKeyStr.isInCollection(names))
           .withColumn(partCol, col(partCol).cast("string"))
         val laid =
@@ -722,7 +702,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val jobs = decisions.map { case (dir, partVal, nOut) => Future {
         val tmp = dir.resolveSibling(dir.getFileName.toString + ".compacting")
-        val base = spark.read.parquet(dir.toString)
+        val base = Parquet.read(spark, dir.toString)
         val laid =
           if (clusterBy.isEmpty)
             base.repartitionByRange(nOut, col(spec.tsCol))
@@ -748,7 +728,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
         laid.write.mode("overwrite").parquet(tmp.toString)
         swapIn(dir, tmp) // staging fully written before any rename
       }}
-      awaitAll(jobs)
+      ZTable.awaitAll(jobs)
       decisions.size
     }
   }
@@ -773,14 +753,14 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     if (parts.isEmpty) return 0L
     // ONE probe job over the whole table (pred pushdown + row-group
     // stats still bound it) instead of date-grain-many tiny count jobs
-    val hitsByPart: Map[String, Long] = spark.read.parquet(path)
+    val hitsByPart: Map[String, Long] = Parquet.read(spark, path)
       .where(pred)
       .groupBy(partKeyStr.as("p__"))
       .count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val affected = parts.filter(d => hitsByPart.contains(dirToPartValue(d)))
     stagedRewrite(affected,
-      spark.read.parquet(path).where(!coalesce(pred, lit(false))))
+      Parquet.read(spark, path).where(!coalesce(pred, lit(false))))
     hitsByPart.values.sum
   }
 
@@ -859,14 +839,14 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     if (parts.isEmpty) return 0L
     val k = keys.select(col(keyCol)).distinct().persist()
     try {
-      val hitsByPart: Map[String, Long] = spark.read.parquet(path)
+      val hitsByPart: Map[String, Long] = Parquet.read(spark, path)
         .join(k, Seq(keyCol), "left_semi")
         .groupBy(partKeyStr.as("p__"))
         .count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val affected = parts.filter(d => hitsByPart.contains(dirToPartValue(d)))
       stagedRewrite(affected,
-        spark.read.parquet(path).join(k, Seq(keyCol), "left_anti"))
+        Parquet.read(spark, path).join(k, Seq(keyCol), "left_anti"))
       hitsByPart.values.sum
     } finally k.unpersist()
   }
@@ -919,7 +899,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       // EMPTIED table (no data files, nothing to infer from), where it
       // is the only schema there is.
       val tFieldsOpt =
-        if (hasData) Some(spark.read.parquet(path).schema.fields
+        if (hasData) Some(Parquet.read(spark, path).schema.fields
           .filterNot(_.name == partCol).toIndexedSeq)
         else recordedSchema.map(_.fields.toIndexedSeq)
       tFieldsOpt match {
@@ -950,7 +930,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     // date-grain-many tiny join jobs)
     val hitsByPart: Map[String, Long] =
       if (parts.isEmpty) Map.empty
-      else spark.read.parquet(path)
+      else Parquet.read(spark, path)
         .join(srcKeys, keyCols, "left_semi")
         .groupBy(partKeyStr.as("p__"))
         .count()
@@ -977,7 +957,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     if (affected.nonEmpty)
       withPartCol(src)
         .where(partKeyStr.isInCollection(affectedNames))
-        .unionByName(spark.read.parquet(path)
+        .unionByName(Parquet.read(spark, path)
           .where(partKeyStr.isInCollection(affectedNames))
           .join(srcKeys, keyCols, "left_anti"))
         .repartition(col(partCol))
@@ -1038,6 +1018,23 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
 }
 
 object ZTable {
+
+  /** Await EVERY concurrent write job — even after one fails — and
+    * only then propagate the first failure (compact's per-partition
+    * rewrites, JoinView's two accumulation writes). A fail-fast
+    * `Await(Future.sequence)` returns (and `mutate` releases the table
+    * locks) while sibling Futures are still writing and swapping;
+    * another process's entry recovery would then sweep their live
+    * staging dirs as debris mid-write. */
+  private[graft] def awaitAll[T](jobs: Seq[scala.concurrent.Future[T]])(
+      implicit ec: scala.concurrent.ExecutionContext): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val settled = Await.result(
+      Future.sequence(jobs.map(_.transform(t => scala.util.Success(t)))),
+      Duration.Inf)
+    settled.foreach(_.get)
+  }
 
   /** Shared meta-sidecar parser — jackson is thread-safe for read once
     * configured, and already on Spark's classpath. */

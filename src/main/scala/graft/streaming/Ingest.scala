@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.sources.{ZPartitionBy, ZTableSpec}
+import graft.sources.{Parquet, ZPartitionBy, ZTableSpec}
 
 /** Event-stream row shape (mirrors the `events` test table). */
 case class Event(event_id: Long, ts: Timestamp, user_id: Long,
@@ -572,7 +572,7 @@ object Ingest {
     }
     val dup =
       if (priorState.nonEmpty) {
-        val seen = spark.read.parquet(priorState: _*)
+        val seen = Parquet.read(spark, priorState: _*)
         val crossDup = br.select(col("band"), col("bhash"), col("id"), col("sig"))
           .join(seen.select(col("band"), col("bhash"), col("sig").as("siga")),
             Seq("band", "bhash"))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.ZTableSpec
+import graft.sources.{Parquet, ZTableSpec}
 
 /** End-to-end streaming demo: replay the events parquet as a file stream,
   * ingest it through the streaming sink into a ZTable-layout directory,
@@ -31,7 +31,7 @@ object IngestDemo {
     // events.parquet carries TIMESTAMP(NANOS): stream it as raw long nanos
     // and convert, exactly like the batch reader (graft.Tables.events).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir.toString).schema
+    val schema = Parquet.read(spark, srcDir.toString).schema
     val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
 
@@ -40,7 +40,7 @@ object IngestDemo {
     val q = Ingest.ingestStream(stream, out, ckpt, ZTableSpec())
     q.awaitTermination(120000)
 
-    val streamed = spark.read.parquet(out)
+    val streamed = Parquet.read(spark, out)
     val batch = graft.Tables.events(spark, sfDir)
     val nStream = streamed.count()
     val nBatch = batch.count()

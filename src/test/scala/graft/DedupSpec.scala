@@ -147,6 +147,22 @@ class DedupSpec extends SparkSpec {
     assert(wideLsh.contains((0L, 1L)))
   }
 
+  test("shuffle sizing gate counts a cached leaf only once its buffers are materialized") {
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val corpus = graft.Tables.documents(spark, sf001)
+    val loaded = corpus.where(col("doc_id") >= 0).persist()
+    val unloaded = corpus.where(col("doc_id") >= 1).persist()
+    try {
+      loaded.count()
+      // materialized cache: its exact byte size passes the gate, no pre-pass
+      val (n, jobs) = jobsStarted(Dedup.autoShufflePartitions(loaded, "text"))
+      assert(n == session && jobs == 0, s"$jobs jobs")
+      // unmaterialized cache: stats are an estimate, so the exact pre-pass runs
+      val (m, prePass) = jobsStarted(Dedup.autoShufflePartitions(unloaded, "text"))
+      assert(m == session && prePass >= 1, s"$prePass jobs")
+    } finally { loaded.unpersist(); unloaded.unpersist() }
+  }
+
   test("single-pass signature expressions are bit-identical to the agg formulations (sf0.001)") {
     val corpus = graft.Tables.documents(spark, sf001)
     // SimHash64 expression vs exploded 64-way bit-count agg

@@ -7,6 +7,28 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Runs `f` and counts the Spark jobs it started from this thread (a
+    * job group scopes the count, so jobs of other threads are not
+    * included). */
+  def jobsStarted[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-started-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted by jobsStarted")
+    try {
+      val r = f
+      org.apache.spark.graftbridge.Bus.drain(sc)
+      (r, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
 }
 
 object SparkSpec {

@@ -546,11 +546,10 @@ class ZTableSpec extends SparkSpec {
   test("awaitAll drains sibling jobs before propagating the first failure") {
     import scala.concurrent.{ExecutionContext, Future}
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val t = ZTable.create(spark, tmp(), Spec())
     val sibDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = Future[Unit] { throw new RuntimeException("rewrite failed") }
     val slow = Future[Unit] { Thread.sleep(500); sibDone.set(true) }
-    val e = intercept[RuntimeException] { t.awaitAll(Seq(boom, slow)) }
+    val e = intercept[RuntimeException] { ZTable.awaitAll(Seq(boom, slow)) }
     assert(e.getMessage == "rewrite failed")
     // a fail-fast Await(Future.sequence) returns here with the sibling
     // still mid-write: `mutate` would release the table lock and another
@@ -660,6 +659,27 @@ class ZTableSpec extends SparkSpec {
     assert(v.read().count() == 4) // key 2 has no right match yet
     v.refresh(L().limit(0), R(2L -> "z"), "b4")
     assert(v.read().where(col("lv") === "c").count() == 1)
+  }
+
+  test("JoinView: a failed accumulation write waits for its sibling before refresh() throws") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = Files.createTempDirectory("graft_jv_fail_").toString + "/v"
+    val v = new graft.sources.JoinView(spark, dir, "k", "k2")
+    // the left store is a plain file, so the left write fails at once
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(Paths.get(dir, "left"), "")
+    // while the right write takes a while per row
+    val slow = udf { (k: Long) => Thread.sleep(300); k }
+    val right = Seq((1L, "x"), (2L, "y")).toDF("k2", "rv")
+      .withColumn("k2", slow(col("k2")))
+    intercept[Exception] {
+      v.refresh(Seq((1L, "a")).toDF("k", "lv"), right, "b1")
+    }
+    // refresh() threw only after the right write had committed...
+    assert(Files.isDirectory(Paths.get(dir, "right", "delta=b1")))
+    // ...so none of its jobs is still running
+    org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 
   test("concurrent mutators + adversarial lock probe: no lost rows, no debris, no overflow") {
