@@ -3,8 +3,9 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.operators.Ohlcv
 import graft.sources.{Parquet, ZTable}
@@ -187,9 +188,10 @@ object QueryRunner {
         table.symbols(str("col"))
       case "describe" =>
         table.describe()
-      case "range" =>
-        table.df.agg(min(col(table.spec.tsCol)).as("first_ts"),
-          max(col(table.spec.tsCol)).as("last_ts"))
+      case "range" => // the table's ts-bounds stamp: no file read when stamped
+        val (first, last) = table.firstLastTs
+        spark.createDataFrame(java.util.List.of(Row(first, last)), StructType(Seq(
+          StructField("first_ts", TimestampType), StructField("last_ts", TimestampType))))
       case "ohlcv" =>
         val ticks = table.scan(str("from"), str("to"))
         val sym = str("col")

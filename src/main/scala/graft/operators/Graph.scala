@@ -28,13 +28,23 @@ object Graph {
   /** Total rank mass in fixed-point units (1.0 ≡ 10¹²). */
   val Scale = 1000000000000L
 
-  /** [[kcore]]'s survivor sets are broadcast into the per-round semi
-    * joins only while the EXACT previous-round count sits under this cap
-    * (~10M longs ≈ 150 MB built — comfortably inside executor memory,
-    * far under the 8 GB broadcast hard cap); larger sets keep the
-    * shuffled join. Overridable via spark.graft.kcore.broadcastCap for
-    * clusters with different executor memory. */
-  private[graft] val BroadcastSurvivorCapDefault = 10000000L
+  /** Built bytes per key of [[kcore]]'s survivor broadcast: a
+    * LongHashedRelation over sparse long ids (hash slots plus the row
+    * pages, both grown by doubling) measures 64 bytes per key at a
+    * power-of-two key count and 96 just past one (GraphSpec); the worst
+    * case is the estimate. */
+  private[graft] val BytesPerSurvivorKey = 96L
+
+  /** [[kcore]] broadcasts its survivor set into the per-round semi joins
+    * only while the set's estimated built size (the EXACT previous-round
+    * count × [[BytesPerSurvivorKey]]) fits this per-executor budget;
+    * larger sets keep the shuffled join. 128 MB is under a third of the
+    * unified memory of a 1 GB executor ((1024 − 300 reserved) MB × 0.6
+    * `spark.memory.fraction` ≈ 434 MB), which every executor must hold
+    * the built relation in — about 1.4M survivors.
+    * `spark.graft.kcore.broadcastCap` (a survivor count) overrides it
+    * for clusters with different executor memory. */
+  private[graft] val BroadcastBudgetBytes = 128L << 20
 
   /** PageRank with damping 0.85 over the UNDIRECTED view of `edges`
     * (both directions added, so every node has out-degree ≥ 1 and no
@@ -271,9 +281,9 @@ object Graph {
     // partitioning (v renamed to id tracks the attribute).
     val symP = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt
-    val BroadcastSurvivorCap = edges.sparkSession.conf
-      .get("spark.graft.kcore.broadcastCap", BroadcastSurvivorCapDefault.toString)
-      .toLong
+    val broadcastBudget = edges.sparkSession.conf
+      .getOption("spark.graft.kcore.broadcastCap")
+      .fold(BroadcastBudgetBytes)(_.toLong * BytesPerSurvivorKey)
     val sym = edges.select(col("a").as("v"), col("b").as("u"))
       .union(edges.select(col("b").as("v"), col("a").as("u")))
       .repartition(symP, col("v"))
@@ -301,11 +311,12 @@ object Graph {
           // round fell back to sort-merge — two edge-sized exchanges —
           // until AQE repaired it stage by stage. aliveN is exact
           // (last round's count), so the gate is deterministic: under
-          // the cap the rounds are broadcast + exchange-free; a
-          // beyond-the-cap survivor set (the 100 TB worst case) keeps
-          // the shuffled plan that cannot OOM the driver.
+          // the budget the rounds are broadcast + exchange-free; a
+          // beyond-the-budget survivor set (the 100 TB worst case)
+          // keeps the shuffled plan that cannot OOM an executor.
           val aliveRef =
-            if (aliveN <= BroadcastSurvivorCap) broadcast(alive) else alive
+            if (aliveN * BytesPerSurvivorKey <= broadcastBudget) broadcast(alive)
+            else alive
           val next = pinLazy(sym
             .join(aliveRef, col("v") === col("id"), "left_semi")
             .join(aliveRef, col("u") === col("id"), "left_semi")

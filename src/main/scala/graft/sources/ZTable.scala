@@ -37,14 +37,18 @@ case class ZTableSpec(
   * (`src/table/mod.rs:51-141`): a directory of date-partitioned,
   * time-sorted Parquet. Everything the reference hand-rolls (mmap columns,
   * binary-search time seek, symbol dictionaries, partition metadata) maps
-  * to Parquet + Catalyst built-ins: vectorized columnar reads, row-group
-  * min/max pruning, dictionary pages, partition-directory pruning
-  * (SURVEY.md §1.5, §4).
+  * to Parquet + Catalyst built-ins: vectorized columnar reads, dictionary
+  * pages, partition-directory pruning (SURVEY.md §1.5, §4). Row-group
+  * min/max pruning does NOT apply to ts: Spark writes `TimestampType` as
+  * INT96 by default (`spark.sql.parquet.outputTimestampType`), whose
+  * footer statistics are undefined, so a ts range prunes by partition
+  * directory only.
   *
   * Scale: `append` hash-distributes rows by partition value so each date
   * directory is written by the executors that own its rows (no single
-  * writer), sorted by ts within files so row-group stats give tight ts
-  * bounds for scan-time pruning.
+  * writer), sorted by ts within files. The table's first/last ts live in
+  * the `_ts_bounds.json` stamp ([[firstLastTs]]), kept by the writes
+  * themselves, so strict appends and range probes never scan the table.
   */
 class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
 
@@ -268,8 +272,14 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     * as a per-row raise_error filter, so the incoming batch is scanned
     * ONCE (a separate pre-write `agg(min)` action would double ingest
     * I/O at scale); an out-of-order row aborts the write job before the
-    * committer publishes any file, and only the (tiny, column-pruned)
-    * last-ts lookup touches the existing table. */
+    * committer publishes any file. The table's last ts comes from the
+    * `_ts_bounds.json` stamp, and the same write pass observes the
+    * batch's min/max ts to advance it — so, like the reference's
+    * meta-derived check, a stamped append never reads the existing
+    * table. Crash protocol: the stamp is deleted before the write and
+    * rewritten (write-then-rename) after the commit; a missing stamp
+    * falls back to one aggregate over the files, and a strict append
+    * that fell back writes the stamp again. */
   def append(df: DataFrame): Unit = append(df, allowColumnDrift = false)
 
   /** Column-SET validation (round 12): an appended batch must present
@@ -316,18 +326,25 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       }
     }
     val data = floorResolution(df)
-    val checked =
-      if (spec.strictOrder && hasData) {
-        val last = lastTs
-        if (last == null) data
-        else data.where(
-          when(col(spec.tsCol) < lit(last), raise_error(concat(
+    // the table's bounds before this batch: the stamp, else (empty
+    // table, or a strict append that needs the last ts) the aggregate;
+    // unknown for a non-strict append into an unstamped table
+    val prior = readStamp().orElse(
+      if (spec.strictOrder || !hasData) Some(scanBounds()) else None)
+    val checked = prior.filter(b => spec.strictOrder && !b.isEmpty) match {
+      case Some(b) =>
+        data.where(
+          when(tsMicros < lit(b.hi), raise_error(concat(
             lit("Timestamp "), col(spec.tsCol).cast("string"),
-            lit(s" is out of order (table last ts: $last)"))))
+            lit(s" is out of order (table last ts: ${b.last})"))))
           .otherwise(lit(true)))
-      } else data
+      case None => data
+    }
+    val batchBounds = org.apache.spark.sql.Observation()
+    dropStamp()
     try {
-      withPartCol(checked)
+      withPartCol(checked.observe(batchBounds,
+          min(tsMicros).as("lo"), max(tsMicros).as("hi")))
         .repartition(col(partCol))
         // partCol FIRST: a dynamic-partition write requires its child
         // ordered by the partition columns and INSERTS a sort when it
@@ -339,6 +356,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
         .sortWithinPartitions(col(partCol), col(spec.tsCol))
         .write.mode("append").partitionBy(partCol).parquet(path)
       recordSchemaIfMissing(data.schema)
+      for (p <- prior; b <- observedBounds(batchBounds)) writeStamp(p ++ b)
     } catch {
       case e: Exception if msgChain(e).exists(_.contains("out of order")) =>
         throw new IllegalStateException(
@@ -422,8 +440,9 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
 
   /** Time-range scan, inclusive bounds (reference `src/table/scan.rs:62-88`).
     * Adds the derived partition predicate so users filtering only on ts
-    * still get directory pruning (SURVEY.md §4), plus the ts predicate
-    * that reaches row-group stats. */
+    * still get directory pruning (SURVEY.md §4) — the only pruning a ts
+    * range gets, since INT96 ts columns carry no row-group stats — plus
+    * the exact ts predicate. */
   def scan(fromTs: String, toTs: String, cols: Seq[String] = Nil): DataFrame = {
     val base = openFiles().getOrElse {
       // empty table: serve the recorded schema (no partition dirs to
@@ -444,11 +463,59 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     if (cols.isEmpty) ranged else ranged.select(cols.map(col): _*)
   }
 
-  /** C2: table first/last timestamp (reference `src/table/meta.rs:39-67`). */
-  def firstTs: java.sql.Timestamp =
-    df.agg(min(col(spec.tsCol))).head.getTimestamp(0)
-  def lastTs: java.sql.Timestamp =
-    df.agg(max(col(spec.tsCol))).head.getTimestamp(0)
+  /** C2: table first/last timestamp (reference `src/table/meta.rs:39-67`),
+    * null on a table with no non-null ts. Read from the `_ts_bounds.json`
+    * stamp; without one, one aggregate over the files. */
+  def firstLastTs: (java.sql.Timestamp, java.sql.Timestamp) = {
+    val b = readStamp().getOrElse(scanBounds())
+    (b.first, b.last)
+  }
+  def firstTs: java.sql.Timestamp = firstLastTs._1
+  def lastTs: java.sql.Timestamp = firstLastTs._2
+
+  /** The ts as epoch µs — the unit of the stamp and of the strict check. */
+  private def tsMicros = unix_micros(col(spec.tsCol).cast(TimestampType))
+
+  private def stampPath = Paths.get(path, ZTable.TsBoundsFile)
+
+  /** The stamp, or None when absent (legacy table, or a delete, merge or
+    * crash since the last append). Reads take no lock: a writer may drop
+    * the stamp at any moment, so absence is the read failing. */
+  private def readStamp(): Option[ZTable.TsBounds] =
+    try {
+      val node = ZTable.metaMapper.readTree(Files.readString(stampPath))
+      def v(k: String) = Option(node.get(k)).filterNot(_.isNull).map(_.asLong)
+      Some((v("firstTs"), v("lastTs")) match {
+        case (Some(lo), Some(hi)) => ZTable.TsBounds(lo, hi)
+        case _ => ZTable.TsBounds.Empty
+      })
+    } catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Write-then-rename, so a reader or a crash never sees half a stamp. */
+  private def writeStamp(b: ZTable.TsBounds): Unit = {
+    def num(x: Long) = if (b.isEmpty) "null" else x.toString
+    val tmp = stampPath.resolveSibling(ZTable.TsBoundsFile + ".tmp")
+    Files.writeString(tmp, s"""{"firstTs":${num(b.lo)},"lastTs":${num(b.hi)}}""")
+    Files.move(tmp, stampPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Every write except compact calls this before touching data. */
+  private def dropStamp(): Unit = Files.deleteIfExists(stampPath)
+
+  /** The fallback: one aggregate over the files, no job when empty. */
+  private def scanBounds(): ZTable.TsBounds =
+    openFiles().fold(ZTable.TsBounds.Empty)(d =>
+      ZTable.TsBounds.of(d.agg(min(tsMicros), max(tsMicros)).head))
+
+  /** A finished write's observed min/max ts; None when the metrics did
+    * not arrive (an empty row), which leaves the stamp missing rather
+    * than wrong. */
+  private def observedBounds(o: org.apache.spark.sql.Observation): Option[ZTable.TsBounds] = {
+    import scala.concurrent.duration._
+    scala.util.Try(scala.concurrent.Await.result(o.future, 1.minute)).toOption
+      .filter(_.length == 2).map(ZTable.TsBounds.of)
+  }
 
   /** C3: schema describe (the reference's schema debug print,
     * `src/schema.rs:88-103`) as a DataFrame — one row per column plus
@@ -515,8 +582,8 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     * rewrites any partition whose file count exceeds its byte-size
     * budget into `ceil(bytes / targetFileBytes)` files, RANGE-partitioned
     * and sorted on ts — so compacted files carry non-overlapping ts
-    * ranges and row-group min/max pruning gets strictly tighter than the
-    * append layout. Each partition rewrite is one distributed Spark job
+    * ranges; the rows are the same, so the `_ts_bounds.json` stamp is
+    * kept. Each partition rewrite is one distributed Spark job
     * (driver only enumerates partition dirs — bounded by the date grain,
     * never by rows), and the per-partition jobs are DISPATCHED
     * CONCURRENTLY (Spark's scheduler interleaves them; the driver loop
@@ -780,6 +847,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
   private def stagedRewrite(affected: List[java.nio.file.Path],
       survivors: DataFrame): Unit = {
     if (affected.isEmpty) return
+    dropStamp() // removing rows may lower the table's max ts
     val affectedNames = affected.map(dirToPartValue).toSet
     val stage = Paths.get(path)
       .resolve(s".delete-stage-${ProcessHandle.current.pid}")
@@ -875,6 +943,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     // recover any crashed earlier rewrite (see [[recoverSwaps]]); the
     // swap below is the shared two-rename [[swapIn]] protocol
     recoverSwaps()
+    dropStamp() // replaced rows may have held the table's first/last ts
     val parts =
       if (!Files.exists(root)) Nil
       else lsDir(root).filter(d => Files.isDirectory(d) &&
@@ -1040,6 +1109,29 @@ object ZTable {
     * configured, and already on Spark's classpath. */
   private[sources] val metaMapper =
     new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Hidden sidecar holding the table's first/last ts. */
+  private[graft] val TsBoundsFile = "_ts_bounds.json"
+
+  /** A table's `[lo, hi]` ts in epoch µs — the analog of the reference's
+    * per-partition first/last ts in `_meta` (`src/table/meta.rs:25-67`).
+    * `lo > hi` ([[TsBounds.Empty]]) is a table with no non-null ts, so
+    * `++` (min of the los, max of the his) needs no special case. */
+  private[sources] final case class TsBounds(lo: Long, hi: Long) {
+    def isEmpty: Boolean = lo > hi
+    def ++(o: TsBounds): TsBounds = TsBounds(math.min(lo, o.lo), math.max(hi, o.hi))
+    private def ts(us: Long) =
+      if (isEmpty) null
+      else org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us)
+    def first: java.sql.Timestamp = ts(lo)
+    def last: java.sql.Timestamp = ts(hi)
+  }
+  private[sources] object TsBounds {
+    val Empty = TsBounds(Long.MaxValue, Long.MinValue)
+    /** From a (min, max) row, null when no ts was seen. */
+    def of(r: Row): TsBounds =
+      if (r.isNullAt(0) || r.isNullAt(1)) Empty else TsBounds(r.getLong(0), r.getLong(1))
+  }
 
   /** Create (meta file is table existence, reference `src/table/mod.rs:54-56`).
     * With a schema, it is recorded in `_meta.json` up front — like the

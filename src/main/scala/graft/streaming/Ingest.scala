@@ -92,14 +92,28 @@ object Ingest {
   def appendBatchIdempotent(table: graft.sources.ZTable,
       df: DataFrame, batchId: Long): Unit = {
     val mark = java.nio.file.Paths.get(table.path, "_last_stream_batch")
-    val last =
-      if (java.nio.file.Files.exists(mark))
-        java.nio.file.Files.readString(mark).trim.toLong
-      else -1L
-    if (batchId > last) {
+    if (batchId > readMark(mark)) {
       table.append(df)
-      java.nio.file.Files.writeString(mark, batchId.toString)
+      commitMark(mark, batchId)
     }
+  }
+
+  /** The last landed batch id, -1 before the first. */
+  private def readMark(mark: java.nio.file.Path): Long =
+    if (java.nio.file.Files.exists(mark))
+      java.nio.file.Files.readString(mark).trim.toLong
+    else -1L
+
+  /** Write-then-rename: an in-place truncate+write crashing midway
+    * leaves an unparseable mark that wedges every later batch. The
+    * `.tmp` keeps the mark's leading underscore, so a leftover one is
+    * hidden from parquet reads of the directory. */
+  private def commitMark(mark: java.nio.file.Path, batchId: Long): Unit = {
+    val tmp = mark.resolveSibling(mark.getFileName.toString + ".tmp")
+    java.nio.file.Files.writeString(tmp, batchId.toString)
+    java.nio.file.Files.move(tmp, mark,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Exactly-once streaming sink writing the REFERENCE'S NATIVE FORMAT:
@@ -149,13 +163,7 @@ object Ingest {
         }
       }
       graft.sources.GraftNative.append(compat, dir, tag = f"b$batchId%06d-")
-      // write-then-rename: an in-place truncate+write crashing midway
-      // leaves an unparseable mark that wedges every later batch
-      val markTmp = mark.resolveSibling(mark.getFileName.toString + ".tmp")
-      java.nio.file.Files.writeString(markTmp, batchId.toString)
-      java.nio.file.Files.move(markTmp, mark,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      commitMark(mark, batchId)
     }
   }
 
@@ -191,13 +199,11 @@ object Ingest {
     * testing). */
   def appendPqIdempotent(df: DataFrame, idCol: String, vecCol: String,
       indexPath: String, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(indexPath)
     val mark = root.resolve("_last_stream_batch")
-    val last =
-      if (Files.exists(mark)) Files.readString(mark).trim.toLong else -1L
-    if (batchId <= last) return
+    if (batchId <= readMark(mark)) return
     val tag = f"b$batchId%06d-"
     def ls(p: java.nio.file.Path) = {
       val s = Files.list(p)
@@ -224,10 +230,7 @@ object Ingest {
         }.foreach(f =>
           Files.move(f, dest.resolve(tag + f.getFileName.toString)))
       }
-    val markTmp = mark.resolveSibling(mark.getFileName.toString + ".tmp")
-    Files.writeString(markTmp, batchId.toString)
-    Files.move(markTmp, mark, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    commitMark(mark, batchId)
   }
 
   /** Streaming OHLCV bars: tumbling window per symbol with a watermark

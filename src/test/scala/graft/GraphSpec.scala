@@ -69,6 +69,37 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("kcore broadcast gate: BytesPerSurvivorKey covers a built survivor relation") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // kcore's per-round shape: edges semi-joined against a broadcast
+    // survivor set of sparse long ids (sparse keys rule out the
+    // LongHashedRelation's dense-array layout, the smaller one). The
+    // hash array and the row pages grow by doubling, so bytes per key
+    // swing with the key count: sizes on both sides of a power of two.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val perKey = Seq(1L << 17, (1L << 17) + 1, 200000L, (1L << 18) + 1, 400000L).map { n =>
+      val alive = spark.range(n).select((col("id") * 7919L + 13L).as("id"))
+      val sym = spark.range(1000).select((col("id") * 7919L + 13L).as("v"))
+      val j = sym.join(broadcast(alive), col("v") === col("id"), "left_semi")
+      assert(j.collect().length == 1000)
+      val built = nodes(j.queryExecution.executedPlan)
+        .collect { case b: BroadcastExchangeExec => b.metrics("dataSize").value }
+      assert(built.size == 1, j.queryExecution.executedPlan)
+      n -> built.head.toDouble / n
+    }
+    info(perKey.map { case (n, b) => f"$n: $b%.1f" }.mkString("bytes per key: ", ", ", ""))
+    val worst = perKey.map(_._2).max
+    assert(worst <= Graph.BytesPerSurvivorKey, f"$worst%.1f bytes per key")
+    // a measurement, not a blanket: the constant stays within 2x of it
+    assert(worst * 2 > Graph.BytesPerSurvivorKey, f"$worst%.1f bytes per key")
+  }
+
   test("kcore: cascading peel matches sequential peeling; core property holds") {
     // path 1-2-3 hangs off a 4-clique {4,5,6,7}: for k=2 the whole
     // path peels over MULTIPLE rounds (1 first, then 2, then 3)

@@ -150,4 +150,76 @@ object MutationProps extends Properties("graft.ztable") {
           out.df.schema("v").dataType.simpleString == "bigint"
       }
     }
+
+  // The ts-bounds stamp under ANY sequence of writes: appends (strict
+  // and not, empty batches included), deletes down to full wipes,
+  // merges and compactions. Whenever the stamp exists it equals
+  // min/max(ts) over the table, and a strict append is accepted exactly
+  // when no row precedes the table's TRUE last ts — lowerThenAppend
+  // deletes the newest days, then appends between the new and the old
+  // max, which a stale stamp would reject.
+  private type Tbl = List[(Long, Option[Int], Double)]
+  private sealed trait Step
+  private case class AppendRows(rows: Tbl, strict: Boolean) extends Step
+  private case class DeleteUpTo(cut: Int) extends Step
+  private case class DeleteKeys(keys: List[Long]) extends Step
+  private case class MergeRows(rows: Tbl) extends Step
+  private case object Compact extends Step
+  private case class LowerThenAppend(day: Int) extends Step
+
+  private val step: Gen[Step] = Gen.oneOf(
+    for { rows <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, mergeRow))
+          strict <- Gen.oneOf(true, false) } yield AppendRows(rows, strict),
+    Gen.frequency(3 -> Gen.choose(0, 99), 1 -> Gen.const(99)).map(DeleteUpTo(_)),
+    Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(0L, 11L))).map(DeleteKeys(_)),
+    Gen.choose(0, 4).flatMap(Gen.listOfN(_, mergeRow)).map(MergeRows(_)),
+    Gen.const(Compact),
+    Gen.choose(0, 3).map(LowerThenAppend(_)))
+
+  property("ZTable ts-bounds stamp stays exact and never wrongly rejects a strict append") =
+    Prop.forAllNoShrink(
+      Gen.choose(0, 8).flatMap(Gen.listOfN(_, mergeRow)),
+      Gen.choose(1, 5).flatMap(Gen.listOfN(_, step))) { (tbl, steps) =>
+      withTable("graft_prop_stamp_") { dir =>
+        val t = build(dir, tbl)
+        val strictT = new graft.sources.ZTable(spark, dir.toString,
+          t.spec.copy(strictOrder = true))
+        val stamp = dir.resolve(graft.sources.ZTable.TsBoundsFile)
+        def maxDay(m: Tbl) = m.flatMap(_._2).maxOption
+        // strict: accepted iff every non-null ts is at or after the last
+        def strictAppend(m: Tbl, rows: Tbl): (Tbl, Boolean) = {
+          val ok = maxDay(m).forall(last => rows.flatMap(_._2).forall(_ >= last))
+          val accepted =
+            try { strictT.append(frame(rows)); true }
+            catch { case _: IllegalStateException => false }
+          (if (accepted) m ++ rows else m, accepted == ok)
+        }
+        steps.foldLeft((tbl, true)) { case ((model, okSoFar), s) =>
+          val (next, outcomeOk) = s match {
+            case AppendRows(rows, true) => strictAppend(model, rows)
+            case AppendRows(rows, false) => t.append(frame(rows)); (model ++ rows, true)
+            case DeleteUpTo(cut) =>
+              t.deleteWhere(col("v") <= lit(cut.toDouble)); (model.filterNot(_._3 <= cut), true)
+            case DeleteKeys(keys) =>
+              t.deleteMatching(keys.toDF("id"), "id")
+              (model.filterNot(r => keys.contains(r._1)), true)
+            case MergeRows(rows) =>
+              t.merge(frame(rows), Seq("id"))
+              val ks = rows.map(_._1).toSet
+              (model.filterNot(r => ks(r._1)) ++ rows, true)
+            case Compact => t.compact(2048L); (model, true)
+            case LowerThenAppend(day) =>
+              t.deleteWhere(col("ts") >= lit(dayTs(day)))
+              val lowered = model.filterNot(_._2.exists(_ >= day))
+              val (m, ok) = strictAppend(lowered, List((99L, Some(day), 1.0)))
+              (m, ok && m.size == lowered.size + 1)
+          }
+          val got = readBack(t)
+          val days = got.flatMap(_._2)
+          val stampOk = !java.nio.file.Files.exists(stamp) ||
+            t.firstLastTs == ((days.minOption.map(dayTs).orNull, days.maxOption.map(dayTs).orNull))
+          (next, okSoFar && outcomeOk && stampOk && got == next.sorted)
+        }._2
+      }
+    }
 }

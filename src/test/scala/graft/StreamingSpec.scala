@@ -431,6 +431,24 @@ class StreamingSpec extends SparkSpec {
     assert(table.df.count() == 3)
   }
 
+  test("ZTable stream mark commits by rename: a leftover .tmp breaks neither replay nor reads") {
+    val out = Files.createTempDirectory("ztable_mark_").toString
+    val table = graft.sources.ZTable.create(spark, out, ZTableSpec(strictOrder = false))
+    val batch0 = Seq(ev(1, "2024-01-01 10:00:01", "click", 1.0)).toDF()
+    Ingest.appendBatchIdempotent(table, batch0, 0L)
+    // a crash while writing the next mark leaves a torn temp file beside
+    // the committed mark
+    val mark = java.nio.file.Paths.get(out, "_last_stream_batch")
+    val torn = mark.resolveSibling("_last_stream_batch.tmp")
+    Files.writeString(torn, "not a batch id")
+    Ingest.appendBatchIdempotent(table, batch0, 0L)
+    assert(table.df.count() == 1, "replayed batch 0 must be skipped")
+    Ingest.appendBatchIdempotent(table,
+      Seq(ev(2, "2024-01-02 10:00:02", "click", 2.0)).toDF(), 1L)
+    assert(table.df.count() == 2)
+    assert(Files.readString(mark) == "1" && !Files.exists(torn))
+  }
+
   test("keyless stream-stream interval join via fragment buckets matches batch") {
     implicit val sqlCtx = spark.sqlContext
     val purchases = MemoryStream[Event]

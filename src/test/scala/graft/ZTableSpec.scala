@@ -970,4 +970,59 @@ class ZTableSpec extends SparkSpec {
     assert(t.lastTs == ts("2024-01-03 10:00:10"))
     assert(t.symbols("sym").collect().map(_.getString(0)).toSeq == Seq("A", "B", "C"))
   }
+
+  // ---- ts-bounds stamp: first/last ts kept by the writes, so strict
+  // appends and /q range do not scan the table (reference
+  // src/table/meta.rs:25-67 keeps them in each partition's _meta).
+
+  test("without the ts-bounds stamp a strict append still rejects out-of-order rows, then re-stamps") {
+    val path = tmp()
+    val t = ZTable.create(spark, path, Spec(strictOrder = true))
+    t.append(sample)
+    val stamp = Paths.get(path, ZTable.TsBoundsFile)
+    assert(Files.exists(stamp))
+    // the state a crash between the data commit and the stamp leaves
+    Files.delete(stamp)
+    val before = t.df.orderBy("ts").collect().toSeq
+    // inside the table's range, so only the aggregate can reject it
+    val late = Seq((ts("2024-01-02 09:00:00"), "Z", 9.9)).toDF("ts", "sym", "v")
+    intercept[IllegalStateException] { t.append(late) }
+    assert(t.df.orderBy("ts").collect().toSeq == before, "the rejected write published rows")
+    t.append(Seq((ts("2024-01-04 00:00:00"), "D", 5.0)).toDF("ts", "sym", "v"))
+    assert(Files.exists(stamp), "a strict append that fell back must stamp again")
+    assert(t.firstLastTs == ((ts("2024-01-01 10:00:07"), ts("2024-01-04 00:00:00"))))
+  }
+
+  test("a strict append into a stamped table starts as many jobs as into an empty one") {
+    val t = ZTable.create(spark, tmp(), Spec(strictOrder = true))
+    def batch(day: Int) = Seq(
+      (ts(f"2024-02-$day%02d 10:00:00"), "A", 1.0),
+      (ts(f"2024-02-$day%02d 11:00:00"), "B", 2.0)).toDF("ts", "sym", "v")
+    val (_, intoEmpty) = jobsStarted(t.append(batch(1)))
+    (2 to 4).foreach(d => t.append(batch(d)))
+    val (_, intoStamped) = jobsStarted(t.append(batch(5)))
+    assert(intoStamped == intoEmpty,
+      s"stamped append started $intoStamped jobs, empty-table append $intoEmpty")
+    assert(t.df.count() == 10L)
+  }
+
+  test("/q range reads the stamp: the aggregate's row, no job and no parquet file") {
+    import org.apache.spark.sql.functions._
+    val path = tmp()
+    val t = ZTable.create(spark, path, Spec(strictOrder = false))
+    t.append(sample)
+    def check(): Unit = {
+      val want = t.df.agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
+        .collect().toSeq
+      val ((files, got), jobs) = jobsStarted {
+        val df = QueryRunner.run(spark, s"""{"op":"range","table":"$path"}""")
+        (df.inputFiles.toSeq, df.collect().toSeq)
+      }
+      assert(got == want)
+      assert(files.isEmpty && jobs == 0, s"range read $files with $jobs jobs")
+    }
+    check()
+    assert(t.deleteWhere(lit(true)) == 4L)
+    check()
+  }
 }
