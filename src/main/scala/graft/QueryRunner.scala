@@ -4,7 +4,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, LocalLimit, Project, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.operators.Ohlcv
@@ -44,6 +48,58 @@ import graft.sources.{Parquet, ZTable}
 object QueryRunner {
 
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Most rows a served reply may carry: the HTTP server's replies, the
+    * rows `split` and `pagerank` collect for their serving faces, and
+    * the largest `k` pagerank accepts. A constant, not a knob. */
+  val MaxReplyRows = 100000
+
+  /** A reply over [[MaxReplyRows]] rows; the HTTP server answers it with
+    * 413. */
+  final class ReplyTooLarge extends RuntimeException(
+    s"the reply has more than $MaxReplyRows rows; narrow the request: a smaller " +
+      "'k', an 'out' path that writes the result distributed, or a tighter range")
+
+  /** Collects `df` in its order, holding at most MaxReplyRows + 1 rows
+    * on the driver, and throws [[ReplyTooLarge]] beyond MaxReplyRows.
+    * The plan's shape picks the collect, so it runs one job over `df`'s
+    * own stages:
+    *   - a global sort at the root (under at most a projection) plans as
+    *     `TakeOrderedAndProjectExec`: a top-k of MaxReplyRows + 1 per
+    *     partition, merged on the driver as each arrives, with no
+    *     sampling job and no range exchange;
+    *   - a plan the optimizer folds the limit into (a local relation, or
+    *     one already capped below it) runs as it is;
+    *   - any other plan keeps at most MaxReplyRows + 1 rows per
+    *     partition (a local limit), and the driver counts partitions as
+    *     they arrive, dropping what it holds once the total passes the
+    *     cap. A root global limit would plan `CollectLimitExec`, which
+    *     reads the partitions in growing waves of jobs. */
+  def collectBounded(df: DataFrame): Array[Row] = {
+    val n = MaxReplyRows + 1
+    val limited = df.limit(n)
+    val rows = limited.queryExecution.optimizedPlan match {
+      case Limit(_, Sort(_, true, _, _) | Project(_, Sort(_, true, _, _))) =>
+        limited.collect()
+      case Limit(_, _) => collectUnordered(ColumnBridge.ofRows(df.sparkSession,
+        LocalLimit(Literal(n), ColumnBridge.logicalPlan(df))))
+      case _ => limited.collect()
+    }
+    if (rows.length > MaxReplyRows) throw new ReplyTooLarge
+    rows
+  }
+
+  private def collectUnordered(df: DataFrame): Array[Row] = {
+    val parts = collection.mutable.TreeMap.empty[Int, Array[InternalRow]]
+    var total = 0L
+    ColumnBridge.collectPartitions(df) { (i, rows) =>
+      total += rows.length
+      if (total > MaxReplyRows) parts.clear() else parts(i) = rows
+    }
+    if (total > MaxReplyRows) throw new ReplyTooLarge
+    val toRow = ColumnBridge.toRow(df.schema)
+    parts.valuesIterator.flatMap(_.iterator.map(toRow)).toArray
+  }
 
   /** Dispatch one JSON request to a DataFrame (the testable core).
     * `root` is set by the HTTP shim: ops that name tables then resolve
@@ -126,14 +182,12 @@ object QueryRunner {
             case Some(p) => // bulk face (the pagerank "out" shape): a
               // corpus-sized split lands distributed; the JSON reply is
               // a one-row summary, so nothing doc-scale transits the
-              // driver — the serving face below otherwise holds up to
-              // three driver-resident copies of the reply (collect here,
-              // local relation, server-side toJSON collect)
+              // driver
               out.write.mode("overwrite").parquet(p)
               spark.range(1).select(lit(p).as("split_path"))
-            case None =>
-              spark.createDataFrame(
-                java.util.Arrays.asList(out.collect(): _*), out.schema)
+            case None => // at most MaxReplyRows docs, else ReplyTooLarge
+              spark.createDataFrame(java.util.Arrays.asList(
+                collectBounded(out): _*), out.schema)
           }
         } finally graft.util.Pins.release(comp)
       case "pagerank" => // graph centrality over an edge table (g1's operator)
@@ -163,23 +217,20 @@ object QueryRunner {
               pr.write.mode("overwrite").parquet(p)
               spark.range(1).select(lit(p).as("ranks_path"))
             case None =>
-              // serving face: bounded BY CONSTRUCTION when "k" rides the
-              // request — TakeOrdered ships k rows per partition to the
-              // driver, so a caller who forgets "out" on a 100 M-node
-              // graph gets k rows, not a node-sized collect. Without
-              // "k" the full ranks ARE the response (the reference
-              // serializes full query replies, src/server/query.rs:234-253)
-              // — the documented driver-sized surprise "k" exists to avoid.
+              // serving face: with "k", the top k ranks (TakeOrdered
+              // ships k rows per partition to the driver); without it,
+              // all ranks by id, refused with ReplyTooLarge past
+              // MaxReplyRows nodes — a graph that size takes "k" or "out"
               val ranked = req.get("k")
                 .collect { case n: Number => n.intValue } match {
                 case Some(k) =>
-                  require(k > 0 && k <= 100000,
-                    s"pagerank: k must be in [1, 100000], got $k")
+                  require(k > 0 && k <= MaxReplyRows,
+                    s"pagerank: k must be in [1, $MaxReplyRows], got $k")
                   pr.orderBy(col("r").desc, col("id")).limit(k)
                 case None => pr.orderBy("id")
               }
-              spark.createDataFrame(
-                java.util.Arrays.asList(ranked.collect(): _*), pr.schema)
+              spark.createDataFrame(java.util.Arrays.asList(
+                collectBounded(ranked): _*), pr.schema)
           }
         } finally graft.operators.Graph.release(pr)
       case "scan" =>

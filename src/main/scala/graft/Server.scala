@@ -7,7 +7,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** S9 completed: the reference's HTTP surface (ref `src/main.rs:16-49`,
   * `src/server/mod.rs:40-154`) as a thin JDK-httpserver shim over
@@ -33,7 +34,10 @@ import org.apache.spark.sql.SparkSession
   * QueryRunner JSON op, so HTTP adds no second query path — and the
   * Spark session behind it is the same long-lived one the reference's
   * process model implies. Errors map to 400 with a JSON message, like
-  * the reference's error writes.
+  * the reference's error writes; a reply over
+  * [[QueryRunner.MaxReplyRows]] rows or a `/q` body over
+  * [[GraftServer.MaxBodyBytes]] maps to 413. Every reply collects
+  * through [[QueryRunner.collectBounded]], one bounded top-k pass.
   */
 class GraftServer(spark: SparkSession, root: String, port: Int = 0,
     numThreads: Int = GraftServer.defaultNumThreads) {
@@ -79,9 +83,6 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0,
     } finally ex.close()
   }
 
-  private def runToJson(json: String): String =
-    QueryRunner.run(spark, json, Some(root)).toJSON.collect().mkString("[", ",", "]")
-
   /** `GET /` — the reference serves an HTML index page from
     * `src/server/static/` (ref `src/server/mod.rs:40-154`); the analog
     * here is a dependency-free page listing the root's table dirs with
@@ -120,8 +121,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0,
     * bucket-ordered from the ohlcv op, so each symbol's arrays are
     * time-ascending — the uPlot requirement. */
   private def uplotOhlcv(bars: org.apache.spark.sql.DataFrame): String = {
-    val rows = bars.select("bucket", bars.columns(1), "open", "high", "low",
-      "close", "volume").collect()
+    val rows = QueryRunner.collectBounded(bars.select("bucket", bars.columns(1),
+      "open", "high", "low", "close", "volume"))
     case class Series(t: collection.mutable.ArrayBuffer[Long] = collection.mutable.ArrayBuffer(),
         o: collection.mutable.ArrayBuffer[Double] = collection.mutable.ArrayBuffer(),
         h: collection.mutable.ArrayBuffer[Double] = collection.mutable.ArrayBuffer(),
@@ -183,8 +184,11 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0,
     try {
       (ex.getRequestMethod, ex.getRequestURI.getPath) match {
         case ("POST", "/q") =>
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          respond(ex, 200, runToJson(body))
+          val body = ex.getRequestBody.readNBytes(GraftServer.MaxBodyBytes + 1)
+          if (body.length > GraftServer.MaxBodyBytes) respond(ex, 413,
+            s"""{"error":"request body exceeds ${GraftServer.MaxBodyBytes} bytes"}""")
+          else respond(ex, 200, GraftServer.replyJson(QueryRunner.run(spark,
+            new String(body, StandardCharsets.UTF_8), Some(root))))
         case ("GET", "/") =>
           respond(ex, 200, indexHtml(), "text/html")
         case ("GET", "/favicon.ico") =>
@@ -195,8 +199,9 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0,
               val df = QueryRunner.run(spark, mapper.writeValueAsString(Map(
                 "op" -> "symbols", "table" -> s"$root/${safeName(tbl)}",
                 "col" -> column)))
-              respond(ex, 200,
-                df.collect().map(r => jstr(r.get(0).toString)).mkString("[", ",", "]"))
+              respond(ex, 200, QueryRunner.collectBounded(df)
+                .map(r => Option(r.get(0)).fold("null")(v => jstr(v.toString)))
+                .mkString("[", ",", "]"))
             case _ => respond(ex, 400,
               """{"error":"url must be in format /symbols/{table}/{column}"}""")
           }
@@ -229,7 +234,11 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0,
       case e: Throwable =>
         // if the 200 headers already went out (failure mid-write), a
         // second sendResponseHeaders throws — just close the exchange
-        try respond(ex, 400, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
+        val code = e match {
+          case _: QueryRunner.ReplyTooLarge => 413
+          case _ => 400
+        }
+        try respond(ex, code, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
         catch { case _: Exception => ex.close() }
     })
 
@@ -275,6 +284,25 @@ private object StaticAssets {
 
 /** CLI: `runMain graft.GraftServer <rootDir> [port]`. */
 object GraftServer {
+
+  /** Largest `POST /q` body the server reads; a longer one gets 413
+    * before anything is parsed or run. */
+  val MaxBodyBytes: Int = 1 << 20
+
+  /** The `/q` reply: `df`'s rows as a JSON array, byte-identical to
+    * `df.toJSON.collect().mkString("[", ",", "]")`, collected by
+    * [[QueryRunner.collectBounded]]. Each row becomes one string column,
+    * `to_json(struct(<every column>))`: the generator and default options
+    * `toJSON` uses (session time zone, null fields dropped), but projected
+    * inside the plan, so a root sort stays visible to the top-k path.
+    * Columns are renamed by position first, so duplicate or dotted names
+    * resolve. */
+  def replyJson(df: DataFrame): String = {
+    val names = df.columns
+    val json = df.toDF(names.indices.map(i => s"c$i"): _*).select(to_json(struct(
+      names.indices.map(i => col(s"c$i").as(names(i))): _*)))
+    QueryRunner.collectBounded(json).map(_.getString(0)).mkString("[", ",", "]")
+  }
 
   /** Pool size knob — the reference's `ZDB_NUM_THREADS` analog
     * (ref `src/main.rs:19-22`: default 12 pre-forked query workers). */

@@ -435,6 +435,13 @@ class QueryRunnerSpec extends SparkSpec {
       // dot-segment table names must not escape the root dir
       val (tc, tb) = get("/symbols/%2e%2e/sym")
       assert(tc == 400 && tb.contains("invalid table name"), s"$tc $tb")
+      // a null symbol is served as JSON null (sorted first), not a 400
+      val nulls = Files.createTempDirectory("query_runner_").toString
+      ZTable.create(spark, nulls, Spec()).append(Seq(
+        (ts("2024-01-01 10:00:00"), "A"), (ts("2024-01-01 10:01:00"), null))
+        .toDF("ts", "sym"))
+      val (nc, nb) = get(s"/symbols/${java.nio.file.Paths.get(nulls).getFileName}/sym")
+      assert(nc == 200 && nb == """[null,"A"]""", s"$nc $nb")
       // GET /chart/{table} — the candlestick UI page: real HTML whose
       // JS drives exactly the two endpoints golden-tested above (the
       // rendering itself is a browser concern; the contract here is
@@ -612,5 +619,231 @@ class QueryRunnerSpec extends SparkSpec {
          |"out":"/dev/null/ranks"}""".stripMargin) }
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "failed serving request stranded pinned blocks")
+  }
+
+  /** A ZTable over two days with a null symbol, a decimal and an array
+    * column: the value shapes a JSON reply has to render. */
+  private def mkRichTable(): String = {
+    val path = Files.createTempDirectory("qr_reply_").toString
+    ZTable.create(spark, path, Spec()).append(Seq(
+      (ts("2024-01-01 10:00:00"), "A", 1.5, BigDecimal("10.25"), Seq(1, 2)),
+      (ts("2024-01-01 10:30:00"), null, 3.0, BigDecimal("-0.10"), Seq.empty[Int]),
+      (ts("2024-01-01 11:00:00"), "B", 2.0, null, null),
+      (ts("2024-01-02 10:00:00"), "A", 5.0, BigDecimal("7.00"), Seq(3)))
+      .toDF("ts", "sym", "v", "d", "arr")
+      .withColumn("d", org.apache.spark.sql.functions.col("d").cast("decimal(12,2)")))
+    path
+  }
+
+  private def engineJson(req: String): String =
+    QueryRunner.run(spark, req).toJSON.collect().mkString("[", ",", "]")
+
+  test("bounded reply: byte-identical to toJSON for every read op and value shape") {
+    val rich = mkRichTable()
+    val emptied = mkRichTable()
+    ZTable.open(spark, emptied).deleteWhere(org.apache.spark.sql.functions.lit(true))
+    val schemaless = Files.createTempDirectory("qr_reply_none_").toString
+    ZTable.create(spark, schemaless, Spec())
+    val idx = Files.createTempDirectory("qr_reply_idx_").toString + "/idx"
+    graft.operators.InvertedIndex.build(Seq((1L, "spark merge fast"),
+        (2L, "spark slow scan"), (3L, "merge merge window")).toDF("doc_id", "text"),
+      "doc_id", "text", idx, numBuckets = 4)
+    def reqs(t: String): Seq[String] = Seq(
+      s"""{"op":"scan","table":"$t","from":"2024-01-01 00:00:00","to":"2024-12-31 00:00:00"}""",
+      s"""{"op":"scan","table":"$t","from":"2024-01-01 10:15:00",
+         |"to":"2024-01-01 23:00:00","cols":["sym","arr"]}""".stripMargin,
+      s"""{"op":"ohlcv","table":"$t","from":"2024-01-01 00:00:00",
+         |"to":"2024-01-02 23:59:59","col":"sym","price":"v","size":"v",
+         |"width":"1 hour"}""".stripMargin,
+      s"""{"op":"symbols","table":"$t","col":"sym"}""",
+      s"""{"op":"range","table":"$t"}""",
+      s"""{"op":"describe","table":"$t"}""",
+      s"""{"op":"sql","query":"SELECT sym, count(*) AS n, sum(d) AS sd,
+         |max(ts) AS last FROM t GROUP BY sym ORDER BY sym","tables":{"t":"$t"}}"""
+        .stripMargin.replace("\n", " "),
+      s"""{"op":"sql","query":"SELECT ts, d, arr, v AS x, v AS x FROM t",
+         |"tables":{"t":"$t"}}""".stripMargin)
+    val schemalessReqs = Seq(
+      s"""{"op":"scan","table":"$schemaless","from":"2024-01-01 00:00:00",
+         |"to":"2024-12-31 00:00:00"}""".stripMargin,
+      s"""{"op":"range","table":"$schemaless"}""",
+      s"""{"op":"describe","table":"$schemaless"}""")
+    val search = Seq("""["spark","merge"]""", """["nothing"]""").map(terms =>
+      s"""{"op":"search","index":"$idx","terms":$terms,"k":2}""")
+    val bodies = (reqs(rich) ++ reqs(emptied) ++ schemalessReqs ++ search).map { r =>
+      val body = GraftServer.replyJson(QueryRunner.run(spark, r))
+      assert(body == engineJson(r), r)
+      body
+    }
+    // the shapes under test really occur in the replies
+    val richScan = bodies.head
+    assert(richScan.contains("\"d\":10.25") && richScan.contains("\"arr\":[1,2]") &&
+      richScan.contains("\"ts\":\"2024-01-01T10:00:00.000Z\""), richScan)
+    assert(!richScan.contains("null") && richScan.count(_ == '{') == 4, richScan)
+    assert(bodies(3) == """[{},{"sym":"A"},{"sym":"B"}]""", bodies(3))
+    assert(bodies(reqs(rich).size) == "[]")
+    assert(bodies(2 * reqs(rich).size) == "[]") // zero-column empty scan
+  }
+
+  test("bounded reply: ordered replies take one top-k job, range none, scans no more") {
+    val path = mkRichTable()
+    // a full-range scan over many day files
+    val days = Files.createTempDirectory("qr_reply_days_").toString
+    ZTable.create(spark, days, Spec()).append(spark.range(0, 30 * 24)
+      .selectExpr("timestamp_seconds(1704067200 + id * 3600) AS ts",
+        "CAST(id % 7 AS STRING) AS sym", "CAST(id AS DOUBLE) AS v"))
+    def jobs(req: String): Int = {
+      val df = QueryRunner.run(spark, req)
+      jobsStarted(GraftServer.replyJson(df))._2
+    }
+    val ohlcv = s"""{"op":"ohlcv","table":"$path","from":"2024-01-01 00:00:00",
+       |"to":"2024-01-02 23:59:59","col":"sym","price":"v","size":"v",
+       |"width":"1 hour"}""".stripMargin
+    val symbols = s"""{"op":"symbols","table":"$path","col":"sym"}"""
+    val sql = s"""{"op":"sql","query":"SELECT sym, count(*) AS n FROM t GROUP BY sym
+       |ORDER BY sym","tables":{"t":"$path"}}""".stripMargin.replace("\n", " ")
+    for (r <- Seq(ohlcv, symbols, sql)) assert(jobs(r) == 2, r)
+    assert(jobs(s"""{"op":"range","table":"$path"}""") == 0)
+    val scan = s"""{"op":"scan","table":"$days","from":"2024-01-01 00:00:00",
+       |"to":"2024-12-31 00:00:00"}""".stripMargin
+    val scanDf = QueryRunner.run(spark, scan)
+    assert(scanDf.inputFiles.length >= 30)
+    val viaToJson = jobsStarted(scanDf.toJSON.collect())._2
+    assert(jobs(scan) <= viaToJson, s"toJSON took $viaToJson")
+    assert(GraftServer.replyJson(QueryRunner.run(spark, scan)) == engineJson(scan))
+    // the ordered reply's executed plan, as query listeners see it:
+    // TakeOrderedAndProjectExec at the root, no range-partitioning
+    // exchange anywhere
+    import org.apache.spark.sql.execution.{QueryExecution, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.sparkPlan.collect {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+              f.relation.location.rootPaths.map(_.toUri.getPath)
+          }.flatten.contains(path)) seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try for (r <- Seq(ohlcv, symbols, sql)) {
+      seen.clear()
+      GraftServer.replyJson(QueryRunner.run(spark, r))
+      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+      assert(seen.size == 1, r)
+      val plan = seen.peek.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      assert(plan.isInstanceOf[TakeOrderedAndProjectExec], s"$r\n$plan")
+      val ranged = plan.collect {
+        case s: ShuffleQueryStageExec => s.plan
+        case e: ShuffleExchangeExec => e
+      }.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .filter(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning])
+      assert(ranged.isEmpty, s"$r\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("bounded reply: past MaxReplyRows rows the reply is refused, 413 over HTTP") {
+    val cap = QueryRunner.MaxReplyRows
+    val path = Files.createTempDirectory("qr_reply_big_").toString
+    ZTable.create(spark, path, Spec()).append(spark.range(0, cap + 1)
+      .selectExpr("timestamp_seconds(1704067200 + id) AS ts",
+        "CAST(id AS STRING) AS sym", "CAST(id AS DOUBLE) AS v"))
+    val scan = s"""{"op":"scan","table":"$path","from":"2024-01-01 00:00:00",
+       |"to":"2024-12-31 00:00:00"}""".stripMargin
+    val symbols = s"""{"op":"symbols","table":"$path","col":"sym"}"""
+    val sc = spark.sparkContext
+    // unordered (local limit) and ordered (top-k) paths both refuse, and
+    // leave none of their jobs running
+    for (r <- Seq(scan, symbols)) {
+      val group = s"bounded-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "bounded reply refusal")
+      val e = try intercept[QueryRunner.ReplyTooLarge] {
+        GraftServer.replyJson(QueryRunner.run(spark, r))
+      } finally sc.clearJobGroup()
+      assert(e.getMessage.contains(cap.toString), e.getMessage)
+      val ids = sc.statusTracker.getJobIdsForGroup(group)
+      assert(ids.nonEmpty)
+      assert(ids.forall(id => sc.statusTracker.getJobInfo(id)
+        .forall(_.status != org.apache.spark.JobExecutionStatus.RUNNING)), r)
+    }
+    // cap rows exactly still serve
+    val capped = s"""{"op":"scan","table":"$path","from":"2024-01-01 00:00:00",
+       |"to":"2024-01-02 03:46:39","cols":["v"]}""".stripMargin
+    assert(QueryRunner.run(spark, capped).count() == cap)
+    assert(GraftServer.replyJson(QueryRunner.run(spark, capped)).count(_ == '{') == cap)
+    val root = java.nio.file.Paths.get(path).getParent.toString
+    val name = java.nio.file.Paths.get(path).getFileName.toString
+    val server = new GraftServer(spark, root)
+    val port = server.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def send(r: java.net.http.HttpRequest): (Int, String) = {
+        val resp = client.send(r, java.net.http.HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode, resp.body)
+      }
+      def uri(p: String) = java.net.URI.create(s"http://127.0.0.1:$port$p")
+      for (body <- Seq(scan, symbols)) {
+        val (c, b) = send(java.net.http.HttpRequest.newBuilder(uri("/q"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build())
+        assert(c == 413 && b.contains(s"more than $cap rows") && b.contains("'k'") &&
+          b.contains("'out'") && b.contains("tighter range"), s"$c $b")
+      }
+      val (gc, gb) = send(java.net.http.HttpRequest.newBuilder(
+        uri(s"/symbols/$name/sym")).GET().build())
+      assert(gc == 413 && gb.contains(s"more than $cap rows"), s"$gc $gb")
+      assert(send(java.net.http.HttpRequest.newBuilder(uri("/")).GET().build())._1 == 200)
+    } finally server.stop()
+  }
+
+  test("POST /q bodies are read up to MaxBodyBytes; beyond, 413 and nothing runs") {
+    val path = mkTable()
+    val server = new GraftServer(spark, "/tmp")
+    val port = server.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def send(r: java.net.http.HttpRequest): (Int, String) = {
+        val resp = client.send(r, java.net.http.HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode, resp.body)
+      }
+      def uri(p: String) = java.net.URI.create(s"http://127.0.0.1:$port$p")
+      // a delete padded with JSON whitespace to a given byte length
+      def padded(len: Int): String = {
+        val req = s"""{"op":"delete","table":"$path","where":"sym = 'B'"}"""
+        req + " " * (len - req.length)
+      }
+      val max = GraftServer.MaxBodyBytes
+      val (c1, b1) = send(java.net.http.HttpRequest.newBuilder(uri("/q"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(padded(max + 1))).build())
+      assert(c1 == 413 && b1.contains(s"exceeds $max bytes"), s"$c1 $b1")
+      assert(ZTable.open(spark, path).df.count() == 4, "an over-long body ran")
+      assert(send(java.net.http.HttpRequest.newBuilder(uri("/")).GET().build())._1 == 200)
+      // exactly MaxBodyBytes is read and runs
+      val (c2, b2) = send(java.net.http.HttpRequest.newBuilder(uri("/q"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(padded(max))).build())
+      assert(c2 == 200 && b2 == """[{"rows_deleted":1}]""", s"$c2 $b2")
+    } finally server.stop()
+  }
+
+  test("pagerank without k past MaxReplyRows nodes: refused, pins released") {
+    val dir = Files.createTempDirectory("qr_graph_big_").toString
+    spark.range(0, QueryRunner.MaxReplyRows).selectExpr("id AS src", "id + 1 AS dst")
+      .write.parquet(s"$dir/edges")
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[QueryRunner.ReplyTooLarge] {
+      QueryRunner.run(spark, s"""{"op":"pagerank","edges":"$dir/edges","iters":1}""")
+    }
+    assert(e.getMessage.contains(s"more than ${QueryRunner.MaxReplyRows} rows"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "a refused pagerank reply stranded pinned blocks")
+    // k still serves the same graph
+    val top = QueryRunner.run(spark,
+      s"""{"op":"pagerank","edges":"$dir/edges","iters":1,"k":3}""").collect()
+    assert(top.length == 3)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 }
