@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Pins
+
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints the result JSON line for the driver
   * (first AND last, with short chunk lines between, so a bounded
@@ -43,13 +45,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // Warm up the JVM/codegen/file-listing paths so the alphabetically
     // first query doesn't absorb session startup cost.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -81,14 +77,17 @@ object Bench {
     // shared warm-up only stabilizes them; anything construction-eager
     // is also re-paid inside every timed rep, so nothing escapes timing.
     val analysisErrs = selected.flatMap { case (name, fn) =>
-      try { fn(spark, sfDir).queryExecution.analyzed; None }
+      try { Pins.scope(fn(spark, sfDir).queryExecution.analyzed); None }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed analysis: ${e.getMessage}")
         Some(name -> e)
       }
     }.toMap
     // Gate 2: a query that throws DURING execution records null, never
-    // its time-to-throw.
+    // its time-to-throw. Each construction above and each rep below runs
+    // in Pins.scope, so no query's pins or caches outlive it: left to
+    // pile up over a 160-query sweep, they made late rows time 2-4×
+    // their isolated mins (r5 sweep: w2/w4/q7).
     val errors = scala.collection.mutable.Map[String, String]() ++
       analysisErrs.map { case (n, e) => n -> s"analysis: ${e.getMessage}" }
     val results = selected.map { case (name, fn) =>
@@ -97,7 +96,7 @@ object Bench {
         val times = (1 to reps).flatMap { _ =>
           val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Pins.scope(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
             Some((System.nanoTime() - t0) / 1e9)
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -105,18 +104,6 @@ object Bench {
             None
           }
         }
-        // Session hygiene: several queries persist() intermediates or
-        // leave a small pinned survivor set (components, canonicalKeep)
-        // — over a 160-query sweep those cached blocks accumulate and
-        // late rows time 2-4× their isolated mins (r5 sweep: w2/w4/q7).
-        // Drop everything cached once a query's reps are done; queries
-        // share nothing, so this only removes dead weight. clearCache
-        // alone is NOT enough: localCheckpoint pins (kcore's output,
-        // componentsStar's final edge multiset) bypass the cache
-        // manager entirely (graft.util.Pins), so sweep the raw
-        // persistent-RDD map too.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         name -> (if (times.size == reps) Some(times.min) else None)
       }
     }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.operators.Ohlcv
 import graft.sources.{Parquet, ZTable}
+import graft.util.Pins
 
 /** S9: the remote query surface, as a JSON request runner — the
   * lifecycle-parity analog of the reference's HTTP server
@@ -170,12 +171,12 @@ object QueryRunner {
         val docs = Parquet.read(spark, str("docs"))
         val idc = strOpt("id").getOrElse("doc_id")
         val txt = strOpt("text").getOrElse("text")
-        // components() pins its fixpoint via localCheckpoint (r12) —
-        // materialize the reply, then release in a finally so repeated
-        // /q split requests (or failing ones) leave the long-lived
-        // server's block store flat, like the pagerank op
-        val comp = graft.operators.Dedup.nearDupComponents(docs, idc, txt)
-        try {
+        // the components fixpoint pins (r12): the reply is materialized
+        // inside the scope, which frees every pin and cache the request
+        // made, so repeated or failing requests leave the long-lived
+        // server's block store flat
+        Pins.scope {
+          val comp = graft.operators.Dedup.nearDupComponents(docs, idc, txt)
           val out = graft.operators.Sampling.clusterSplit(docs, idc, comp)
             .orderBy("id")
           strOpt("out") match {
@@ -189,7 +190,7 @@ object QueryRunner {
               spark.createDataFrame(java.util.Arrays.asList(
                 collectBounded(out): _*), out.schema)
           }
-        } finally graft.util.Pins.release(comp)
+        }
       case "pagerank" => // graph centrality over an edge table (g1's operator)
         val iters = req.get("iters")
           .collect { case n: Number => n.intValue }.getOrElse(3)
@@ -203,14 +204,11 @@ object QueryRunner {
         val edges = Parquet.read(spark, str("edges")).select(
           col(strOpt("src").getOrElse("src")).as("src"),
           col(strOpt("dst").getOrElse("dst")).as("dst"))
-        // Serving default is pinResult = true: repeated short-run calls
-        // from a long-lived session must not leak the loop caches
-        // (Graph.pagerank's scaladoc contract should bind HERE, not on
-        // every HTTP client), and the pin is released — in a finally,
-        // so a failed write/collect cannot strand node-sized blocks in
-        // the long-lived server's block store — before returning.
-        val pr = graft.operators.Graph.pagerank(edges, iters, pinResult = true)
-        try {
+        // the scope frees the run's pins and loop caches once the reply
+        // is written or collected, and on any failure, so repeated
+        // requests leave the long-lived server's block store flat
+        Pins.scope {
+          val pr = graft.operators.Graph.pagerank(edges, iters)
           strOpt("out") match {
             case Some(p) => // bulk face: ranks land distributed (node-sized
               // results at graph scale never transit the driver)
@@ -232,7 +230,7 @@ object QueryRunner {
               spark.createDataFrame(java.util.Arrays.asList(
                 collectBounded(ranked): _*), pr.schema)
           }
-        } finally graft.operators.Graph.release(pr)
+        }
       case "scan" =>
         table.scan(str("from"), str("to"), list("cols"))
       case "symbols" =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.Text
+import graft.util.Pins
 
 /** Deduplication operators for the training-data pipeline (north star):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -426,8 +427,7 @@ object Dedup {
       idCol: String, textCol: String, n: Int = 8,
       thrNum: Int = 1, thrDen: Int = 2, fpp: Double = 0.01): DataFrame = {
     val spark = docs.sparkSession
-    val benchSh = shingles(bench, idCol, textCol, n).select(col("sh")).distinct()
-      .persist()
+    val benchSh = Pins.cache(shingles(bench, idCol, textCol, n).select(col("sh")).distinct())
     val bf = benchSh.stat.bloomFilter("sh", math.max(benchSh.count(), 1L), fpp)
     val bfBc = spark.sparkContext.broadcast(bf)
     // named so the PlanSpec pin can anchor on THIS filter (an anonymous
@@ -537,13 +537,10 @@ object Dedup {
     // exchange below it, so nothing is reused). The pin is doc-count-
     // sized (id + bands longs), safe at any corpus scale — it is the
     // signature table a production pipeline materializes anyway.
-    // PIN CONTRACT: the returned plan reads through it; callers outside
-    // the Bench/Verify harness release with Pins.release on the result.
-    val sig = docs.select(col(idCol).as("id"),
+    val sig = Pins.pin(docs.select(col(idCol).as("id"),
         graft.plans.TextOps.minhashBands(words, shingleN, bands, rowsPerBand)
           .as("bsig"))
-      .where(col("bsig").isNotNull)
-      .localCheckpoint()
+      .where(col("bsig").isNotNull))
     // `maxDocFreq` prunes stop-shingles from the VERIFY sets — the same
     // guard and the same pruned-Jaccard THRESHOLD SEMANTICS as
     // [[jaccardPairs]]: every pair d2 emits satisfies exactly d4's
@@ -689,10 +686,9 @@ object Dedup {
     * driver OOM at 16 g before round 10 — on a tiny graph. Truncating
     * lineage per round makes round cost O(1) in round count, which is
     * also the only shape that survives deep-diameter components at
-    * 100 TB. Same contract as [[componentsStar]]: the returned plan
-    * reads through the FINAL pin; callers done with the labeling free
-    * it with `Pins.release(result)` (Bench/Verify sweep it between
-    * queries; the serving op releases per request).
+    * 100 TB. Same contract as [[componentsStar]]: the body runs in
+    * [[graft.util.Pins.owned]], and the returned plan reads through the
+    * FINAL pin only, which passes to the caller's scope.
     *
     * `checkpointDir`: when set, each round's labeling is RELIABLY
     * checkpointed there (parquet-class durability via the RDD
@@ -707,34 +703,30 @@ object Dedup {
     * detection regression) fails with a clear error instead of
     * spinning the cluster forever. */
   def components(edges: DataFrame, checkpointDir: Option[String] = None,
-      maxRounds: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+      maxRounds: Int = 100): DataFrame = Pins.owned {
     // LAZY pin on the local path (r14, guide §1.2 pass count): every
     // pin here — the init labeling and each round's `next` — is
     // immediately followed by the label-sum signature aggregate, and a
-    // lazy localCheckpoint lets that ONE sig job both materialize the
-    // blocks and compute the sum, where the eager pin paid a separate
+    // lazy pin lets that ONE sig job both materialize the blocks and
+    // compute the sum, where the eager pin paid a separate
     // materialization job first (2 jobs/round -> 1; fixed scheduling
     // latency dominates these node-sized rounds — r13 OptProbe). Safe
     // because sig() computes every partition (lineage truncates at that
     // job's end) BEFORE the previous round's blocks are released. The
     // reliable-checkpoint path keeps eager semantics.
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(false)
-    def unpin(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty) graft.util.Pins.release(df)
+    def pin(df: DataFrame): DataFrame = Pins.pin(df, eager = false, dir = checkpointDir)
     // The symmetrized edge list is PRE-PARTITIONED on the join key (r13
     // optimization, guide §2.4): every round's neighbor-min join reads
     // `sym` by dst, and an InMemoryRelation keeps its outputPartitioning,
     // so paying the edge-sized exchange ONCE here removes it from every
     // round (the comp/nmin sides are node-sized and stay partitioned by
-    // id through the pins — localCheckpoint preserves partitioning).
+    // id through the pins — a local checkpoint preserves partitioning).
+    // The returned labeling reads only its final pin, so Pins.owned
+    // frees `sym` on return.
     val symP = sessionShufflePartitions(edges)
-    val sym = edges.select(col("ida").as("src"), col("idb").as("dst"))
+    val sym = Pins.cache(edges.select(col("ida").as("src"), col("idb").as("dst"))
       .union(edges.select(col("idb").as("src"), col("ida").as("dst")))
-      .repartition(symP, col("dst"))
-      .persist()
+      .repartition(symP, col("dst")))
     // Init = identity labeling LOWERED by one propagation round (r13):
     // comp0(v) = min(v, min neighbor(v)) comes out of one aggregate over
     // the already-dst-partitioned sym — the same exchange the old
@@ -757,37 +749,27 @@ object Dedup {
     var prevSig = sig(comp)
     var converged = false
     var rounds = 0
-    try {
-      while (!converged) {
-        rounds += 1
-        if (rounds > maxRounds)
-          throw new IllegalStateException(
-            s"components: no fixpoint after $maxRounds rounds — the edge " +
-            "list has a component of diameter > maxRounds (use " +
-            "componentsStar, which converges in O(log n) alternations, " +
-            "or raise maxRounds)")
-        val nmin = sym
-          .join(comp.select(col("id").as("dst"), col("comp").as("ncomp")), Seq("dst"))
-          .groupBy(col("src")).agg(min(col("ncomp")).as("nmin"))
-        val next = pin(comp
-          .join(nmin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp")))
-        val s = sig(next)
-        unpin(comp)
-        comp = next
-        converged = s.compareTo(prevSig) == 0
-        prevSig = s
-      }
-    } catch { case t: Throwable =>
-      // error path (maxRounds throw, lost executor): the caller never
-      // sees the labeling, so the live round cache would be stranded —
-      // drop it and the symmetrized edges before rethrowing
-      sym.unpersist()
-      unpin(comp)
-      throw t
+    while (!converged) {
+      rounds += 1
+      if (rounds > maxRounds)
+        throw new IllegalStateException(
+          s"components: no fixpoint after $maxRounds rounds — the edge " +
+          "list has a component of diameter > maxRounds (use " +
+          "componentsStar, which converges in O(log n) alternations, " +
+          "or raise maxRounds)")
+      val nmin = sym
+        .join(comp.select(col("id").as("dst"), col("comp").as("ncomp")), Seq("dst"))
+        .groupBy(col("src")).agg(min(col("ncomp")).as("nmin"))
+      val next = pin(comp
+        .join(nmin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
+        .select(col("id"),
+          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp")))
+      val s = sig(next)
+      Pins.release(comp)
+      comp = next
+      converged = s.compareTo(prevSig) == 0
+      prevSig = s
     }
-    sym.unpersist()
     comp
   }
 
@@ -838,18 +820,15 @@ object Dedup {
     * O(log n) alternations) turns a convergence-detection regression
     * into a clear error instead of an unbounded cluster spin. */
   def componentsStar(edges: DataFrame, checkpointDir: Option[String] = None,
-      maxRounds: Int = 50): DataFrame = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+      maxRounds: Int = 50): DataFrame = Pins.owned {
     // Round pins are LAZY on the local path (r14, guide §1.2 pass
     // count): each alternation's pin is immediately followed by
     // next.count(), which materializes every partition in the same job
     // (2 jobs/alternation -> 1). The ENTRY pins (`all`, `loops`) stay
     // EAGER: `loops` must hold blocks before round 1 releases `e`'s
     // leaves (= `all`'s blocks), and nothing counts it in between.
-    def pinLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(false)
+    def pin(df: DataFrame, eager: Boolean): DataFrame =
+      Pins.pin(df, eager, checkpointDir)
     def bothDirs(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     def star(e: DataFrame, large: Boolean): DataFrame = {
@@ -885,7 +864,8 @@ object Dedup {
     // plan still nests geometrically and analysis OOMs after ~6 rounds.
     // pin() truncates lineage to a materialized RDD: localCheckpoint by
     // default, reliable checkpoint when checkpointDir is set.
-    val all = pin(edges.select(col("ida").as("u"), col("idb").as("v")).distinct())
+    val all = pin(edges.select(col("ida").as("u"), col("idb").as("v")).distinct(),
+      eager = true)
     // nodes appearing ONLY in self-loops vanish from the star rounds
     // (the u =!= v entry filter) but are nodes of the input graph —
     // [[components]] and the union-find contract label them with
@@ -898,53 +878,38 @@ object Dedup {
     // input scan total: `loops` materializes off `all`'s blocks before
     // round 1 releases them.
     val loops = pin(all.where(col("u") === col("v"))
-      .select(col("u").as("id")).distinct())
+      .select(col("u").as("id")).distinct(), eager = true)
     var e = all.where(col("u") =!= col("v"))
     var eCount = e.count()
     var converged = false
     var rounds = 0
-    try {
-      while (!converged) {
-        rounds += 1
-        if (rounds > maxRounds)
-          throw new IllegalStateException(
-            s"componentsStar: no fixpoint after $maxRounds alternations — " +
-            "star rounds converge in O(log n); this indicates a " +
-            "convergence-detection regression or an edge list far beyond " +
-            "the assumed scale (raise maxRounds only after ruling out the " +
-            "former)")
-        val next = pinLazy(star(star(e, large = true), large = false))
-        val nextCount = next.count() // materializes the lazy pin
-        converged = sameEdges(e, next, eCount, nextCount)
-        eCount = nextCount
-        // next is materialized by its pin, so the previous round's edge
-        // multiset is dead weight NOW. Pins.release, not unpersist: a
-        // localCheckpoint's blocks bypass the cache manager, so the
-        // pre-r11 code (which never unpinned at all — and whose caller
-        // unpersist()s would have been silent no-ops anyway) accumulated
-        // one edge-sized pin per alternation for the session's lifetime.
-        if (checkpointDir.isEmpty) graft.util.Pins.release(e)
-        e = next
-      }
-    } catch { case t: Throwable =>
-      // error path (maxRounds throw, lost executor): release the live
-      // edge-multiset pin AND the self-loop recovery pin — the caller
-      // gets no frame to release them through, and a long-lived session
-      // retrying failed requests would otherwise accumulate pins per
-      // failure
-      if (checkpointDir.isEmpty) {
-        graft.util.Pins.release(e)
-        graft.util.Pins.release(loops)
-      }
-      throw t
+    while (!converged) {
+      rounds += 1
+      if (rounds > maxRounds)
+        throw new IllegalStateException(
+          s"componentsStar: no fixpoint after $maxRounds alternations — " +
+          "star rounds converge in O(log n); this indicates a " +
+          "convergence-detection regression or an edge list far beyond " +
+          "the assumed scale (raise maxRounds only after ruling out the " +
+          "former)")
+      val next = pin(star(star(e, large = true), large = false), eager = false)
+      val nextCount = next.count() // materializes the lazy pin
+      converged = sameEdges(e, next, eCount, nextCount)
+      eCount = nextCount
+      // next is materialized by its pin, so the previous round's edge
+      // multiset is dead weight NOW: freed here, not at the end of the
+      // call, to bound the loop's memory to two edge-sized pins
+      Pins.release(e)
+      e = next
     }
     // stars point leaves at roots; a root's own min neighbor is larger,
     // so least(u, min v) labels roots with themselves. The returned
     // plan reads through the FINAL pinned edge multiset and the tiny
-    // self-loop recovery pin — the TWO residues of this call; callers
-    // done with the labeling free both with Pins.release(result) (the
-    // release walks every pinned leaf of the plan). The pair miners
-    // emit ida < idb strictly, so `loops` is empty there.
+    // self-loop recovery pin — the TWO residues of this call, which
+    // Pins.owned hands to the caller's scope (outside one, the caller
+    // frees both with Pins.release(result), which walks every pinned
+    // leaf of the plan). The pair miners emit ida < idb strictly, so
+    // `loops` is empty there.
     val labels = bothDirs(e).groupBy(col("u"))
       .agg(least(first(col("u")), min(col("v"))).as("comp"))
       .select(col("u").as("id"), col("comp"))

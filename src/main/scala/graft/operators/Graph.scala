@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pins
+
 /** Distributed graph analytics over edge tables — the link-quality
   * signals (PageRank-style centrality) a pretraining pipeline computes
   * over citation/hyperlink graphs, next to the label-propagation
@@ -57,8 +59,8 @@ object Graph {
     * Rank lineage is TRUNCATED every `pinEvery` rounds (reliable
     * `checkpoint` when `checkpointDir` is set, `localCheckpoint`
     * otherwise — the same discipline as [[kcore]] and
-    * [[Dedup.components]]), plus always after the final round, so plan
-    * depth is BOUNDED by 3·pinEvery joins no matter how many
+    * [[Dedup.components]]), plus after the final round of a long run,
+    * so plan depth is BOUNDED by 3·pinEvery joins no matter how many
     * iterations run: Catalyst optimization time stays flat, and on a
     * real cluster a reliable dir makes an executor loss mid-iteration
     * recoverable instead of a full-lineage recompute back to the scan.
@@ -66,31 +68,20 @@ object Graph {
     * pinning every round taxes short runs where lazy chaining would
     * pipeline all rounds into one job — measured 2.2× on the
     * 3-iteration registered query. The default 8 keeps a ≤24-join
-    * optimizer ceiling while a 3-iteration run pays exactly one
-    * materialization (the result itself); iterate-to-convergence
-    * callers get truncation automatically. `pinEvery = 1` is the
+    * optimizer ceiling while a 3-iteration run pays none;
+    * iterate-to-convergence callers get truncation automatically. `pinEvery = 1` is the
     * per-round-measurement mode the scale stress uses.
     * SHORT runs (`iters < pinEvery` — no scheduled pin ever fires,
     * the registered 3-iteration query included) return the LAZY tower
     * with `nodes`/`withDeg` left cached, exactly the r4–r7 shape: the
     * caller's first action materializes all rounds as one pipelined
     * job, paying zero checkpoint cost (a measured ~0.3–0.7 s final-pin
-    * tax at iters=3). The cached blocks back the returned plan, so
-    * they are NOT released here — and NOTHING the caller does to the
-    * RESULT releases them (MEMORY_AND_DISK blocks are not LRU-evicted
-    * once spilled; localCheckpoint-then-unpersist on the result frame
-    * does not touch the upstream pins). A long-lived session making
-    * repeated short-run calls should pass `pinResult = true`: the
-    * final round is pinned even on the short path and `nodes`/
-    * `withDeg` are unpersisted before returning, so the only residue
-    * is the node-sized result itself (freed with [[release]] — NOT
-    * plain `unpersist()`, which is a silent no-op on localCheckpoint
-    * blocks; [[graft.util.Pins]]), at the cost of the one final-pin
-    * materialization. The blunt remedy for already-leaked blocks is
-    * unpersisting everything in `sparkContext.getPersistentRDDs`
-    * (`catalog.clearCache()` ALSO misses localCheckpoint blocks —
-    * graft.Bench does exactly this between queries). LONG runs
-    * (`iters >= pinEvery`) always behave like `pinResult = true`.
+    * tax at iters=3). The body runs in [[graft.util.Pins.owned]]: the
+    * two loop caches back the returned plan, so a short run hands them
+    * to the caller's [[graft.util.Pins.scope]] (which frees them when
+    * it exits); a long run returns its final pin, self-contained, and
+    * the loop caches are freed before returning. A failure frees every
+    * pin and cache the call made.
     *
     * `onRound(0, s)` reports the setup scan (symmetrize + node count +
     * initial pin), `onRound(i, s)` iteration i — the hook the graph
@@ -101,18 +92,8 @@ object Graph {
   def pagerank(edges: DataFrame, iters: Int,
       checkpointDir: Option[String] = None,
       onRound: (Int, Double) => Unit = (_, _) => (),
-      pinEvery: Int = 8,
-      pinResult: Boolean = false): DataFrame = {
+      pinEvery: Int = 8): DataFrame = Pins.owned {
     require(pinEvery >= 1, s"pinEvery must be >= 1, got $pinEvery")
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    // Pins.release, not unpersist: a localCheckpoint's blocks bypass
-    // the cache manager, so unpersist never freed them (the pre-r11
-    // code leaked one node-sized pin per pinEvery window in long runs)
-    def unpin(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty) graft.util.Pins.release(df)
     def rounded[T](r: Int)(f: => T): T =
       graft.util.Timing.rounded(onRound, r)(f)
     val sym = edges.select(col("src"), col("dst"))
@@ -122,12 +103,12 @@ object Graph {
     // time during setup — every node appears as a src in the symmetric
     // multiset, so the sets are identical)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val withDeg = sym.join(deg, "src").persist()
-    val nodes = withDeg.select(col("src").as("id")).distinct().persist()
+    val withDeg = Pins.cache(sym.join(deg, "src"))
+    val nodes = Pins.cache(withDeg.select(col("src").as("id")).distinct())
     val (base, ranks0) = rounded(0) {
       val n = nodes.count()
       val base = (15L * Scale) / (100L * n)
-      // the initial ranks are one select over the persisted node set —
+      // the initial ranks are one select over the cached node set —
       // depth-1 lineage, nothing to truncate
       (base, nodes.select(col("id"), lit(Scale / n).as("r")))
     }
@@ -135,65 +116,31 @@ object Graph {
     var lastPinned: DataFrame = null
     // iters < pinEvery means NO scheduled pin fires — take the lazy
     // path end-to-end (see scaladoc: short runs must not pay a
-    // materialization the chained plan doesn't need) unless the caller
-    // asked for a self-contained result (pinResult)
-    val willPin = iters >= pinEvery || pinResult
-    try {
-      for (r <- 1 to iters) rounded(r) {
-        val next = {
-          val contrib = withDeg
-            .join(ranks, col("src") === col("id"))
-            .select(col("dst").as("cid"), expr("r div deg").as("c"))
-            .groupBy(col("cid")).agg(sum(col("c")).as("cs"))
-          nodes
-            .join(contrib, col("id") === col("cid"), "left")
-            .select(col("id"),
-              (lit(base) + expr("(85 * coalesce(cs, CAST(0 AS BIGINT))) div 100")).as("r"))
-        }
-        if (willPin && (r % pinEvery == 0 || r == iters)) {
-          // a pin materializes everything since the previous pin, so the
-          // earlier pin's blocks are dead weight from here on
-          val pinned = pin(next)
-          if (lastPinned != null) unpin(lastPinned)
-          lastPinned = pinned
-          ranks = pinned
-        } else ranks = next
+    // materialization the chained plan doesn't need)
+    val willPin = iters >= pinEvery
+    for (r <- 1 to iters) rounded(r) {
+      val next = {
+        val contrib = withDeg
+          .join(ranks, col("src") === col("id"))
+          .select(col("dst").as("cid"), expr("r div deg").as("c"))
+          .groupBy(col("cid")).agg(sum(col("c")).as("cs"))
+        nodes
+          .join(contrib, col("id") === col("cid"), "left")
+          .select(col("id"),
+            (lit(base) + expr("(85 * coalesce(cs, CAST(0 AS BIGINT))) div 100")).as("r"))
       }
-      if (willPin) {
-        // iters = 0 runs no round, so pinResult pins the initial ranks
-        // here (the r == iters clause never fired)
-        if (lastPinned == null) ranks = pin(ranks)
-        // the final pin is self-contained (checkpoint files / local
-        // blocks), so the loop caches can be released eagerly — no
-        // lazy-plan hazard
-        withDeg.unpersist()
-        nodes.unpersist()
-      }
-      // else: the lazy tower runs THROUGH nodes/withDeg — releasing them
-      // here would make the caller's first action recompute from the scan
-      ranks
-    } catch { case t: Throwable =>
-      // a mid-loop failure (lost executor, cancelled job) must not
-      // strand the live pins in a long-lived session: the caller never
-      // sees the frame, so nothing downstream can release them. Loop
-      // caches + the newest pin are dead on this path — drop them all
-      // before rethrowing (the flatness contract the specs pin).
-      withDeg.unpersist()
-      nodes.unpersist()
-      if (lastPinned != null) unpin(lastPinned)
-      throw t
+      if (willPin && (r % pinEvery == 0 || r == iters)) {
+        // a pin materializes everything since the previous pin, so the
+        // earlier pin's blocks are dead weight from here on (freed now
+        // to bound the loop's memory, not at the end of the call)
+        val pinned = Pins.pin(next, dir = checkpointDir)
+        if (lastPinned != null) Pins.release(lastPinned)
+        lastPinned = pinned
+        ranks = pinned
+      } else ranks = next
     }
+    ranks
   }
-
-  /** Free a PINNED result (`pinResult = true` short runs, any long
-    * run, [[kcore]]'s output, [[graft.operators.Dedup.componentsStar]]'s
-    * labeling): delegates to [[graft.util.Pins.release]] — plain
-    * `Dataset.unpersist` is a silent no-op on localCheckpoint blocks
-    * (they bypass the cache manager; see Pins' scaladoc and
-    * tools/UnpersistProbe). The serving path ([[graft.QueryRunner]]'s
-    * `pagerank` op) calls this per request so a long-lived session's
-    * block store stays FLAT across calls. */
-  def release(df: DataFrame): Unit = graft.util.Pins.release(df)
 
   /** Triangle count over an ordered edge list (`a < b`, distinct) —
     * the clustering-coefficient numerator (community density of a link
@@ -211,7 +158,7 @@ object Graph {
     * can replay; swap the comparator for (degree, id) to get the
     * skew-proof variant with identical semantics. */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("a"), col("b")).persist()
+    val e = Pins.cache(edges.select(col("a"), col("b")))
     val wedges = e.select(col("a").as("x"), col("b").as("y"))
       .join(e.select(col("a").as("y"), col("b").as("z")), Seq("y"))
     val tris = wedges.join(e,
@@ -238,39 +185,26 @@ object Graph {
     * loss mid-fixpoint kills the job on a real cluster); `maxRounds`
     * turns a convergence regression into a clear error.
     *
-    * Returns every node of the graph with an `in_core` flag.
+    * Returns every node of the graph with an `in_core` flag, as a pin
+    * of its own: the body runs in [[graft.util.Pins.owned]], which frees
+    * every loop cache and survivor pin on return or failure.
     * `onRound(i, s)` reports peel round i's wall (the graph scale
     * stress's hook; no-op by default). */
   def kcore(edges: DataFrame, k: Int,
       checkpointDir: Option[String] = None,
       maxRounds: Int = 100,
-      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else { val d = df.localCheckpoint(); d }
-    // Loop-round pin: LAZY on the local path (r14, guide §1.2 pass
+      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = Pins.owned {
+    // Loop-round pins are LAZY on the local path (r14, guide §1.2 pass
     // count) — every round's pin is immediately followed by the
-    // survivor count, and a lazy localCheckpoint lets that one count
-    // job BOTH materialize the blocks and produce n, where the eager
-    // pin paid a separate materialization job first. Per round: 2 jobs
-    // -> 1, and the fixed job-scheduling latency is what dominates
-    // these node-sized rounds (r13 OptProbe). Safe ONLY because the
-    // count computes every partition (lineage truncates at that job's
-    // end) BEFORE the previous round's blocks are released below. The
+    // survivor count, and a lazy pin lets that one count job BOTH
+    // materialize the blocks and produce n, where the eager pin paid a
+    // separate materialization job first. Per round: 2 jobs -> 1, and
+    // the fixed job-scheduling latency is what dominates these
+    // node-sized rounds (r13 OptProbe). Safe ONLY because the count
+    // computes every partition (lineage truncates at that job's end)
+    // BEFORE the previous round's blocks are released below. The
     // reliable-checkpoint path keeps eager semantics (checkpoint files
     // must exist before the next round builds on them).
-    def pinLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(false)
-    // unpin only the LOCAL variant's blocks: reliable checkpoint files
-    // stay until the checkpoint dir is cleaned. Pins.release, not
-    // unpersist — localCheckpoint blocks bypass the cache manager, so
-    // the pre-r11 unpersist here silently leaked one survivor pin per
-    // peel round for the session's lifetime
-    def unpin(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty) graft.util.Pins.release(df)
     // The symmetrized edge list is PRE-PARTITIONED on the degree-count
     // key (r14, guide §2.4 — the components() discipline): every
     // round's groupBy(v) otherwise pays an edge-sized exchange, and the
@@ -284,82 +218,66 @@ object Graph {
     val broadcastBudget = edges.sparkSession.conf
       .getOption("spark.graft.kcore.broadcastCap")
       .fold(BroadcastBudgetBytes)(_.toLong * BytesPerSurvivorKey)
-    val sym = edges.select(col("a").as("v"), col("b").as("u"))
+    val sym = Pins.cache(edges.select(col("a").as("v"), col("b").as("u"))
       .union(edges.select(col("b").as("v"), col("a").as("u")))
-      .repartition(symP, col("v"))
-      .persist()
-    val nodes = sym.select(col("v").as("id")).distinct().persist()
+      .repartition(symP, col("v")))
+    val nodes = Pins.cache(sym.select(col("v").as("id")).distinct())
     var alive = nodes
     var aliveN = nodes.count()
     var converged = false
     var rounds = 0
-    try {
-      while (!converged) {
-        rounds += 1
-        if (rounds > maxRounds)
-          throw new IllegalStateException(
-            s"kcore: no fixpoint after $maxRounds rounds (peeling depth " +
-            "exceeds the bound — raise maxRounds)")
-        graft.util.Timing.rounded(onRound, rounds) {
-          // both semi joins reference the IDENTICAL `alive` subtree via
-          // join conditions (r13: a renamed projection per side made the
-          // canonical plans differ, so the node-set broadcast was built
-          // twice per round; with matching subtrees it is reused).
-          // The broadcast is EXPLICIT and size-gated (r14): after round
-          // 1 `alive` is a pinned LogicalRDD whose stats the static
-          // planner treats as unknown-huge, so without the hint every
-          // round fell back to sort-merge — two edge-sized exchanges —
-          // until AQE repaired it stage by stage. aliveN is exact
-          // (last round's count), so the gate is deterministic: under
-          // the budget the rounds are broadcast + exchange-free; a
-          // beyond-the-budget survivor set (the 100 TB worst case)
-          // keeps the shuffled plan that cannot OOM an executor.
-          val aliveRef =
-            if (aliveN * BytesPerSurvivorKey <= broadcastBudget) broadcast(alive)
-            else alive
-          val next = pinLazy(sym
-            .join(aliveRef, col("v") === col("id"), "left_semi")
-            .join(aliveRef, col("u") === col("id"), "left_semi")
-            .groupBy(col("v")).agg(count(lit(1)).as("d"))
-            .where(col("d") >= k)
-            .select(col("v").as("id")))
-          // this count MATERIALIZES the lazy pin (computes every
-          // partition), so the previous round's survivor blocks are
-          // dead weight now — drop them (nodes, the round-0 "alive",
-          // is still needed for the final join)
-          val n = next.count()
-          if (alive ne nodes) unpin(alive)
-          // survivors only shrink: equal counts == fixpoint
-          converged = n == aliveN
-          alive = next
-          aliveN = n
-        }
+    while (!converged) {
+      rounds += 1
+      if (rounds > maxRounds)
+        throw new IllegalStateException(
+          s"kcore: no fixpoint after $maxRounds rounds (peeling depth " +
+          "exceeds the bound — raise maxRounds)")
+      graft.util.Timing.rounded(onRound, rounds) {
+        // both semi joins reference the IDENTICAL `alive` subtree via
+        // join conditions (r13: a renamed projection per side made the
+        // canonical plans differ, so the node-set broadcast was built
+        // twice per round; with matching subtrees it is reused).
+        // The broadcast is EXPLICIT and size-gated (r14): after round
+        // 1 `alive` is a pinned LogicalRDD whose stats the static
+        // planner treats as unknown-huge, so without the hint every
+        // round fell back to sort-merge — two edge-sized exchanges —
+        // until AQE repaired it stage by stage. aliveN is exact
+        // (last round's count), so the gate is deterministic: under
+        // the budget the rounds are broadcast + exchange-free; a
+        // beyond-the-budget survivor set (the 100 TB worst case)
+        // keeps the shuffled plan that cannot OOM an executor.
+        val aliveRef =
+          if (aliveN * BytesPerSurvivorKey <= broadcastBudget) broadcast(alive)
+          else alive
+        val next = Pins.pin(sym
+          .join(aliveRef, col("v") === col("id"), "left_semi")
+          .join(aliveRef, col("u") === col("id"), "left_semi")
+          .groupBy(col("v")).agg(count(lit(1)).as("d"))
+          .where(col("d") >= k)
+          .select(col("v").as("id")), eager = false, dir = checkpointDir)
+        // this count MATERIALIZES the lazy pin (computes every
+        // partition), so the previous round's survivor blocks are
+        // dead weight now — drop them (nodes, the round-0 "alive",
+        // is still needed for the final join)
+        val n = next.count()
+        if (alive ne nodes) Pins.release(alive)
+        // survivors only shrink: equal counts == fixpoint
+        converged = n == aliveN
+        alive = next
+        aliveN = n
       }
-    } catch { case t: Throwable =>
-      // error path (maxRounds throw, lost executor): the caller gets no
-      // frame, so every live pin would be stranded for the session's
-      // lifetime — release the loop caches and the current survivor pin
-      // before rethrowing
-      sym.unpersist()
-      nodes.unpersist()
-      if (alive ne nodes) unpin(alive)
-      throw t
     }
     // materialize the NODE-sized output through its OWN pin — a lineage
     // cut, so out's blocks no longer run through the final survivor's
-    // localCheckpoint blocks and every loop cache (edge-sized sym,
-    // nodes, the last survivor pin) can be released right here. The
-    // only residue is the result itself, node-sized, and the caller
-    // frees it with Graph.release(out) — no per-call accumulation.
-    // Recomputing nodes from edges instead would re-scan the edge list
-    // on every downstream action (measured 1.25× on g3).
-    val out = pin(nodes
+    // pin or any loop cache, and Pins.owned frees all of those (the
+    // edge-sized sym, nodes, the last survivor pin) on return. The only
+    // residue is the result itself, node-sized. Recomputing nodes from
+    // edges instead would re-scan the edge list on every downstream
+    // action (measured 1.25× on g3).
+    Pins.pin(nodes
       .join(alive.withColumn("in_core", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("in_core"), lit(false)).as("in_core")))
-    sym.unpersist()
-    nodes.unpersist() // plain persist: lineage back to edges recomputes fine
-    if (alive ne nodes) unpin(alive)
-    out
+      .select(col("id"), coalesce(col("in_core"), lit(false)).as("in_core")),
+      dir = checkpointDir)
   }
 
   /** The skew-proof variant: DEGREE-ORIENTED triangle counting.
@@ -377,13 +295,12 @@ object Graph {
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
     // orient toward the higher (degree, id); carry the head's rank key
-    val out = withDeg.select(
+    val out = Pins.cache(withDeg.select(
       when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("t"), col("b").as("h"), col("db").as("dh")))
         .otherwise(struct(col("b").as("t"), col("a").as("h"), col("da").as("dh")))
         .as("o"))
-      .select(col("o.t").as("t"), col("o.h").as("h"), col("o.dh").as("dh"))
-      .persist()
+      .select(col("o.t").as("t"), col("o.h").as("h"), col("o.dh").as("dh")))
     // wedges among out-neighbors, normalized by rank so the closing
     // oriented edge is uniquely (v -> w)
     val wedges = out.select(col("t"), col("h").as("v"), col("dh").as("dv"))

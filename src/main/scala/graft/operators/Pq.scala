@@ -74,7 +74,7 @@ object Pq {
     * folds them with map-side partials — the shuffle is
     * m·ksub·partitions sub-vector partials, never the corpus. */
   def train(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int): Model = {
+      m: Int, ksub: Int, iters: Int): Model = graft.util.Pins.scope {
     val spark = emb.sparkSession
     import spark.implicits._
     val dim = emb.select(size(col(vecCol))).head.getInt(0)
@@ -87,7 +87,7 @@ object Pq {
       s"corpus has ${seedRows.length} rows < ksub=$ksub codebook entries")
     var books: Array[Array[Array[Double]]] = Array.tabulate(m)(s =>
       seedRows.map(v => v.slice(s * subDim, (s + 1) * subDim)))
-    val base = emb.select(col(vecCol).as("v")).persist()
+    val base = graft.util.Pins.cache(emb.select(col(vecCol).as("v")))
     for (_ <- 1 to iters) {
       val bks = books
       // ONE PqEncode per row assigns all m subspaces, then posexplode
@@ -105,7 +105,6 @@ object Pq {
       books = Array.tabulate(m)(s => Array.tabulate(ksub)(c =>
         parts.get(s * ksub + c).map(_.values).getOrElse(books(s)(c))))
     }
-    base.unpersist()
     Model(books)
   }
 

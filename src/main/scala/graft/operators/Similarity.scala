@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.plans.VectorOps
+import graft.util.Pins
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -354,11 +355,8 @@ object Similarity {
     // corpus-ROW-sized but signature-narrow (id + L+⌈L·H/60⌉ longs per
     // vector — the signature table a production LSH pipeline
     // materializes anyway, ~30× narrower than the vectors at dim 64).
-    // PIN CONTRACT: callers outside the Bench/Verify harness release
-    // with Pins.release on the returned frame.
-    val packed = signed.select(col("id"), col("bks"),
-      VectorOps.packLanes(col("bks"), numPlanes, numTables).as("pks"))
-      .localCheckpoint()
+    val packed = Pins.pin(signed.select(col("id"), col("bks"),
+      VectorOps.packLanes(col("bks"), numPlanes, numTables).as("pks")))
     val bucketed = packed
       .select(col("id"), col("pks"),
         posexplode(col("bks")).as(Seq("tbl", "bucket")))
@@ -504,7 +502,7 @@ object Similarity {
       k: Int, iters: Int, spherical: Boolean = true,
       init: String = "farthest",
       onRound: (Int, Double) => Unit = (_, _) => ())
-      : (Array[Array[Double]], Array[Array[Double]]) = {
+      : (Array[Array[Double]], Array[Array[Double]]) = Pins.scope {
     val spark = emb.sparkSession
     import spark.implicits._
     // onRound(0, s) reports the init scan, onRound(i, s) Lloyd round i —
@@ -519,9 +517,8 @@ object Similarity {
     }
     val prepped = unitPrep(emb, idCol, vecCol, spherical)
     // reused k init rounds + iters times — cache instead of rescanning
-    val base = prepped.select(col(idCol).as("id"), col(vecCol).as("vf"),
-        VectorOps.normSq(col(vecCol)).as("vnormsq"))
-      .persist()
+    val base = Pins.cache(prepped.select(col(idCol).as("id"), col(vecCol).as("vf"),
+        VectorOps.normSq(col(vecCol)).as("vnormsq")))
     def dist2(c: Array[Double]): Column = {
       var cn = 0.0
       c.foreach(x => cn += x * x)
@@ -602,7 +599,6 @@ object Similarity {
       cs = Array.tabulate(cs.length)(i => byCell.get(i + 1).map(_.values).getOrElse(cs(i)))
       if (spherical) cs = cs.map(unit)
     }
-    base.unpersist()
     (seeds, cs)
   }
 

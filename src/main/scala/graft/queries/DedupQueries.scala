@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Dedup
+import graft.util.Pins
 
 /** Dedup queries over `documents`. The generator plants ~0.99-Jaccard
   * near-duplicate pairs with a wide gap to the background (<0.3), so both
@@ -180,10 +181,8 @@ object DedupQueries {
     // subtrees below (the parity check, both banded self-join sides,
     // both brute self-join sides) and the SimHash64 expression — a full
     // tokenize+hash pass over the text — is map-side, so nothing is
-    // reused without the pin. Doc-count-sized (id + one long). PIN
-    // CONTRACT: callers outside the Bench/Verify harness release with
-    // Pins.release on the returned frame.
-    val sig = Dedup.simhash(docs, "doc_id", "text").localCheckpoint()
+    // reused without the pin. Doc-count-sized (id + one long).
+    val sig = Pins.pin(Dedup.simhash(docs, "doc_id", "text"))
     val sigOk = sig
       .join(Dedup.simhashViaAgg(docs, "doc_id", "text")
         .withColumnRenamed("simhash", "simhash_ref"), Seq("id"))
@@ -221,14 +220,6 @@ object DedupQueries {
     * the oracle gate emits two SQL-derivable counts plus three TRUE
     * flags the Spark side proves with EXACT cosines.
     *
-    * PIN CONTRACT: the returned plan reads through ONE localCheckpoint
-    * pin (the corpus-sized labeling) that this method never releases —
-    * a caller outside the Bench/Verify harness (which sweeps all pins
-    * between queries) must free it with `graft.util.Pins.release(df)`
-    * on the RETURNED frame once done, or each call leaks one
-    * materialized labeling for the session's lifetime (plain
-    * `unpersist()` is a silent no-op on localCheckpoint blocks).
-    *
     * The flags:
     *  - `witness_ok`: every dropped doc's witness is kept, shares its
     *    cell, and really is within the threshold;
@@ -241,7 +232,7 @@ object DedupQueries {
     val emb = Tables.embeddings(spark, dir)
     // hash init: one TakeOrdered job instead of k−1 sequential farthest-
     // point scans — the large-k regime SemDeDup actually runs in.
-    // localCheckpoint, not persist (r13 optimization, guide §5): the
+    // a pin, not a cache (r13 optimization, guide §5): the
     // labeling feeds FOUR subtrees of the gate plan below; the pin
     // materializes it once and the whole gate — previously three serial
     // driver actions (witness count, pair agg head, emb count) plus a
@@ -249,11 +240,8 @@ object DedupQueries {
     // aggregates Spark schedules concurrently under the caller's single
     // action. Values are identical: same frames, same expressions, the
     // former driver-side comparisons now literal column expressions.
-    // The pin is the kcore/componentsStar residue discipline:
-    // Bench/Verify sweep pins between queries; callers use Pins.release.
-    val res = graft.operators.Similarity.semDeDup(emb, "vec_id", "embedding",
-      k = 16, iters = 3, threshold = SemDedupThreshold, init = "hash")
-      .localCheckpoint()
+    val res = Pins.pin(graft.operators.Similarity.semDeDup(emb, "vec_id", "embedding",
+      k = 16, iters = 3, threshold = SemDedupThreshold, init = "hash"))
     val vecs = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
     val witness = res.where(!col("kept"))
       .join(res.select(col("id").as("witness"), col("kept").as("w_kept"),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.functions.Text
 import graft.plans.TextOps
+import graft.util.Pins
 
 /** Training-data curation surface (north star): the document-pipeline
   * operators a 100 TB pretraining corpus build needs beyond dedup —
@@ -478,14 +479,10 @@ object PipelineQueries {
     // the returned plan previously RECOMPUTED it — token explode, two
     // count joins, the lot — under the caller's action. The nll frame
     // is doc-count-sized (id + double — the score table a production
-    // run would persist to disk anyway), so one localCheckpoint makes
-    // both reads hit the same blocks. PIN CONTRACT (the d10
-    // discipline): callers outside the Bench/Verify harness (which
-    // sweeps pins between queries) free it with Pins.release on the
-    // returned frame.
-    val nll = SearchQueries.bigramPpl(spark, dir)
-      .select(col("doc_id"), col("nll"))
-      .localCheckpoint()
+    // run would persist to disk anyway), so one pin makes both reads
+    // hit the same blocks.
+    val nll = Pins.pin(SearchQueries.bigramPpl(spark, dir)
+      .select(col("doc_id"), col("nll")))
     val calIds = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(concat(lit("cal:"), col("doc_id").cast("string"))).as("ch"))
@@ -651,7 +648,7 @@ object PipelineQueries {
     * loss) — package-visible for the Ml2Measure calibration harness and
     * PipelineSpec. */
   private[graft] def textClfStats(spark: SparkSession,
-      dir: String): (Long, Long, Double, Double, Double) = {
+      dir: String): (Long, Long, Double, Double, Double) = Pins.scope {
     val docs = Tables.documents(spark, dir)
     val feats = graft.operators.Classifier.hashedBow(
       docs, "doc_id", "text", TextClfBuckets)
@@ -659,9 +656,8 @@ object PipelineQueries {
     val labeled = docs.select(col("doc_id").as("id"),
       (size(filter(toks, _ === "fast")) > size(filter(toks, _ === "slow")))
         .cast("int").as("y"))
-    val data = feats.join(labeled, Seq("id"))
-      .select(concat(col("feats"), array(lit(1.0f))).as("x"), col("y"))
-      .persist()
+    val data = Pins.cache(feats.join(labeled, Seq("id"))
+      .select(concat(col("feats"), array(lit(1.0f))).as("x"), col("y")))
     val w = graft.operators.Classifier.trainLogRegNewton(data, "x", "y",
       iters = 5, dim = TextClfBuckets + 1)
     // ONE evaluation pass (r13 optimization, guide §5): accuracy, trained
@@ -682,7 +678,6 @@ object PipelineQueries {
         lossExpr(w).as("loss_t"),
         lossExpr(new Array[Double](w.length)).as("loss_0"))
       .head
-    data.unpersist()
     (st.getLong(0), st.getLong(1), st.getDouble(2), st.getDouble(3),
       st.getDouble(4))
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.Tables
 import graft.sources.Parquet
 import graft.util.Dec._
+import graft.util.Pins
 
 /** The relational surface the reference lacks entirely (SURVEY.md §2.3
   * joins, §2.6 sorts/limits, §2.7 set ops, A5 rollup/distinct) — exposed
@@ -591,21 +592,20 @@ object Relational {
         md5(col("event_id").cast("string").cast("binary")).as("pri"),
         col("event_id"), col("value"))
       .as[(String, String, Long, Double)]
-    // persisted: the day aggregation feeds both the count and the
+    // cached: the day aggregation feeds both the count and the
     // rollup — without it each action re-runs the raw-events pass
-    val day = typed.groupByKey(_._1)
-      .mapValues(t => (t._2, t._3, t._4))
-      .agg(sk.toColumn.name("sk"))
-      .toDF("day", "sk")
-      .persist()
-    val nDays = day.count()
-    val merged = day
-      .select(explode(arrays_zip(col("sk.pri").as("pri"),
-        col("sk.id").as("id"), col("sk.v").as("v"))).as("e"))
-      .select(col("e.pri"), col("e.id"), col("e.v"))
-      .as[(String, Long, Double)]
-      .select(sk.toColumn).head
-    day.unpersist()
+    val (nDays, merged) = Pins.scope {
+      val day = Pins.cache(typed.groupByKey(_._1)
+        .mapValues(t => (t._2, t._3, t._4))
+        .agg(sk.toColumn.name("sk"))
+        .toDF("day", "sk"))
+      (day.count(), day
+        .select(explode(arrays_zip(col("sk.pri").as("pri"),
+          col("sk.id").as("id"), col("sk.v").as("v"))).as("e"))
+        .select(col("e.pri"), col("e.id"), col("e.v"))
+        .as[(String, Long, Double)]
+        .select(sk.toColumn).head)
+    }
     // the single-pass truth that verifies the rollup: the bottom-k
     // sketch's CONTENT is by definition the k smallest (pri, id) rows,
     // so one codegen TakeOrdered produces the identical arrays without

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.Parquet
 import graft.operators.Similarity
+import graft.util.Pins
 
 /** Similarity-search queries over `embeddings` (Array[Float], dim 64).
   * Cosine values are rounded to 6 dp on both sides: Spark and DuckDB
@@ -555,14 +556,13 @@ object SimilarityQueries {
     * at 100 TB. The sequential-parity cross-check (distributed weights
     * == same-math driver Newton) lives in SimilaritySpec on a bounded
     * sample, where a driver-side replay belongs. */
-  def logreg(spark: SparkSession, dir: String): DataFrame = {
+  def logreg(spark: SparkSession, dir: String): DataFrame = Pins.scope {
     import spark.implicits._
     val v = graft.operators.Similarity.rpPlanes(64, 1)(0)
-    val emb = Tables.embeddings(spark, dir)
+    val emb = Pins.cache(Tables.embeddings(spark, dir)
       .select(concat(col("embedding"), array(lit(1.0f))).as("x"),
         (graft.plans.VectorOps.dot(col("embedding"), typedlit(v)) >= 0)
-          .cast("int").as("y"))
-      .persist()
+          .cast("int").as("y")))
     val iters = 4
     val w = graft.operators.Classifier.trainLogRegNewton(emb, "x", "y", iters)
     // ONE evaluation pass (r14 — the ml2 discipline from r13): accuracy,
@@ -578,7 +578,6 @@ object SimilarityQueries {
       .head
     val (n, acc, lossT, loss0) =
       (st.getLong(0), st.getDouble(1), st.getDouble(2), st.getDouble(3))
-    emb.unpersist()
     Seq((n, lossT <= loss0 * 0.7, acc >= LogRegAccBound))
       .toDF("n_rows", "loss_ok", "acc_ok")
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.Tables
 import graft.util.Dec._
+import graft.util.Pins
 
 /** The rest of the TPC-H query surface expressible over the driver's
   * star schema (TESTDATA.md). The synthetic corpus has no `partsupp`
@@ -259,9 +260,8 @@ object Tpch2 {
     val l = Tables.lineitem(spark, dir)
       .where(col("l_shipdate") >= tsLit("1996-01-01") &&
              col("l_shipdate") <  tsLit("1996-04-01"))
-    val rev = l.groupBy(col("l_suppkey").as("supplier_no"))
-      .agg(sumRevenue(col("l_extendedprice"), col("l_discount")).as("total_revenue"))
-      .persist()
+    val rev = Pins.cache(l.groupBy(col("l_suppkey").as("supplier_no"))
+      .agg(sumRevenue(col("l_extendedprice"), col("l_discount")).as("total_revenue")))
     val mx = rev.agg(max(col("total_revenue")).as("max_revenue"))
     val s = Tables.supplier(spark, dir)
     rev.join(broadcast(mx))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.Tables
 import graft.util.Dec._
+import graft.util.Pins
 
 /** The last five TPC-H shapes (Q2, Q9, Q11, Q20, Q21), adapted to the
   * driver's star schema: the corpus has no `partsupp` and lineitem lacks
@@ -125,10 +126,9 @@ object Tpch3 {
     // persisted side is the group-bounded aggregate (|suppliers×parts|
     // rows, orders smaller than lineitem) — at 100 TB caching it beats
     // rescanning the fact by the fact/group size ratio.
-    val v = Tables.lineitem(spark, dir)
+    val v = Pins.cache(Tables.lineitem(spark, dir)
       .groupBy(col("l_suppkey"), col("l_partkey"))
-      .agg(sum(dec2(col("l_extendedprice"))).as("val"))
-      .persist()
+      .agg(sum(dec2(col("l_extendedprice"))).as("val")))
     val tot = v.agg(sum(col("val")).as("total"), count(lit(1)).as("n"))
     v.join(broadcast(tot))
       .where(col("val") * col("n") > col("total") * lit(3))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
 
+import graft.util.Pins
+
 /** Partition granularity — mirrors the reference's `PartitionBy::{None,
   * Year, Month, Day}` (reference `src/schema.rs:71-77`); directory names
   * use the same strftime shapes (`src/table/write.rs:26-36`). */
@@ -894,7 +896,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     * list, shuffled-hash beyond it — no forced hint, the dq4 lesson),
     * the rewrite a left_anti; ONLY partitions holding a matching key
     * rewrite, once, ts-sorted, all in ONE staged job ([[stagedRewrite]]).
-    * The key projection is persisted for the duration (the probe and
+    * The key projection is cached for the duration (the probe and
     * the staged rewrite both read it) and released before returning.
     * Returns rows deleted. */
   def deleteMatching(keys: org.apache.spark.sql.DataFrame,
@@ -905,8 +907,8 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     val parts = lsDir(root).filter(d => Files.isDirectory(d) &&
       d.getFileName.toString.startsWith(partCol + "="))
     if (parts.isEmpty) return 0L
-    val k = keys.select(col(keyCol)).distinct().persist()
-    try {
+    Pins.scope {
+      val k = Pins.cache(keys.select(col(keyCol)).distinct())
       val hitsByPart: Map[String, Long] = Parquet.read(spark, path)
         .join(k, Seq(keyCol), "left_semi")
         .groupBy(partKeyStr.as("p__"))
@@ -916,7 +918,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
       stagedRewrite(affected,
         Parquet.read(spark, path).join(k, Seq(keyCol), "left_anti"))
       hitsByPart.values.sum
-    } finally k.unpersist()
+    }
   }
 
   /** MERGE (copy-on-write upsert): every table row whose key matches a
@@ -938,7 +940,7 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     * deliberately bypassed: an upsert into history is out-of-order by
     * nature, same class as [[compact]]/[[deleteWhere]] maintenance.
     * Returns (replacedRows, writtenRows). */
-  def merge(source: DataFrame, keyCols: Seq[String]): (Long, Long) = mutate {
+  def merge(source: DataFrame, keyCols: Seq[String]): (Long, Long) = mutate { Pins.scope {
     val root = Paths.get(path)
     // recover any crashed earlier rewrite (see [[recoverSwaps]]); the
     // swap below is the shared two-rename [[swapIn]] protocol
@@ -983,15 +985,15 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     }
     // one source materialization: the delta is re-read for the probe,
     // per affected-partition rewrite, and the final write
-    val src = aligned.persist()
-    // the key set is persisted too ([[deleteMatching]]'s discipline —
+    val src = Pins.cache(aligned)
+    // the key set is cached too ([[deleteMatching]]'s discipline —
     // merge originally skipped it): every affected partition's rewrite
     // job broadcasts srcKeys, and without the pin each of those
     // CONCURRENT jobs re-runs the distinct over all of src's partitions
     // — measured 20 s vs 2 s on a 31-partition merge whose delta came
     // in 64 partitions (the cost scales as affected × srcPartitions
     // tasks, invisible when the delta is a narrow scan)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct().persist()
+    val srcKeys = Pins.cache(src.select(keyCols.map(col): _*).distinct())
     val stage = root.resolve(s".merge-stage-${ProcessHandle.current.pid}")
     try {
     // ONE probe job over the whole table finds every affected partition
@@ -1063,14 +1065,11 @@ class ZTable(val spark: SparkSession, val path: String, val spec: ZTableSpec) {
     recordSchemaIfMissing(src.schema)
     (replaced.get, written)
     } finally {
-      // cache pins and the stage root must not outlive a failed merge:
-      // a throwing rewrite would otherwise leak two persisted frames
-      // for the session and leave the stage for the next op's sweep
-      srcKeys.unpersist()
-      src.unpersist()
+      // the stage root must not outlive a failed merge, or the next op's
+      // sweep finds it (Pins.scope frees the two caches either way)
       if (Files.exists(stage)) rmTree(stage)
     }
-  }
+  }}
 
   private[sources] def writeMeta(schemaJson: Option[String] = None): Unit = {
     // field order is NOT a contract: recordedSchema/open parse the

@@ -501,7 +501,7 @@ object Ingest {
   def nearDupBatch(batch: DataFrame, idCol: String, textCol: String,
       stateDir: String, outDir: String, batchId: Long = 0L,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tauNum: Int = 7, tauDen: Int = 10): Unit = {
+      tauNum: Int = 7, tauDen: Int = 10): Unit = graft.util.Pins.scope {
     import graft.operators.Dedup
     val spark = batch.sparkSession
     locally {
@@ -546,8 +546,8 @@ object Ingest {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    val br = Dedup.bandRows(batch, idCol, textCol, shingleN, numHashes, bands)
-      .persist()
+    val br = graft.util.Pins.cache(
+      Dedup.bandRows(batch, idCol, textCol, shingleN, numHashes, bands))
     val intraDup = br.select(col("band"), col("bhash"), col("id").as("idb"),
         col("sig").as("sigb"))
       .join(br.select(col("band"), col("bhash"), col("id").as("ida"),
@@ -588,7 +588,6 @@ object Ingest {
     val kept = batch.join(dupIds, batch(idCol) === dupIds("id"), "left_anti")
     kept.write.mode("overwrite").parquet(s"$outDir/b$batchId")
     br.write.mode("overwrite").parquet(s"$stateDir/b$batchId")
-    br.unpersist()
   }
 
   /** Streaming wrapper: every micro-batch flows through

@@ -36,6 +36,12 @@ object ColumnBridge {
     }
   }
 
+  /** Runs `body` with the session's SQL conf set on the jobs it starts,
+    * as Dataset actions do. */
+  def withSQLConf[T](spark: SparkSession)(body: => T): T =
+    SQLExecution.withSQLConfPropagated(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])(body)
+
   def toRow(schema: StructType): InternalRow => Row = {
     val convert = CatalystTypeConverters.createToScalaConverter(schema)
     r => convert(r).asInstanceOf[Row]

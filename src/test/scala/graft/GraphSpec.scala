@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
+import graft.util.Pins
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -174,20 +175,6 @@ class GraphSpec extends SparkSpec {
     assert(lazy3.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       .sameElements(pinned3.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)))
     pinned3.unpersist()
-    // pinResult: SHORT runs become self-contained (loop caches released
-    // before returning; see scaladoc — the long-lived-session mode) with
-    // identical values; the returned pin's plan is cache-shallow like a
-    // long run's, and iters = 0 pins too
-    val selfContained = Graph.pagerank(edges, iters = 3, pinResult = true)
-    assert(lazy3.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      .sameElements(selfContained.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)))
-    assert(selfContained.queryExecution.optimizedPlan.collect { case p => p }.size
-      == depth(8))
-    selfContained.unpersist()
-    val r0Pinned = Graph.pagerank(edges, iters = 0, pinResult = true)
-    assert(r0Pinned.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      .sameElements(r0.map(r => (r.getLong(0), r.getLong(1))).sorted))
-    r0Pinned.unpersist()
     // reliable-checkpoint path matches the local-path result exactly
     val dir = java.nio.file.Files.createTempDirectory("graft_pr_ckpt_")
     val local = Graph.pagerank(edges, iters = 3)
@@ -224,7 +211,7 @@ class GraphSpec extends SparkSpec {
       assert(pr.count() == 6)
       assert(live == base + 1,
         s"call $i: long run must leave exactly the final pin, got ${live - base}")
-      Graph.release(pr)
+      Pins.release(pr)
       assert(live == base, s"call $i: release must empty the block store")
     }
     val kedges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("a", "b")
@@ -235,7 +222,7 @@ class GraphSpec extends SparkSpec {
       assert(core.count() == 4)
       assert(live == base + 1,
         s"call $i: kcore must leave exactly its output pin, got ${live - base}")
-      Graph.release(core)
+      Pins.release(core)
       assert(live == base, s"call $i: release must empty the block store")
     }
   }

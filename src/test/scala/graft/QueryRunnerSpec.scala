@@ -621,6 +621,47 @@ class QueryRunnerSpec extends SparkSpec {
       "failed serving request stranded pinned blocks")
   }
 
+  test("failing /q pagerank and split: error replies, block store and cache manager flat") {
+    // each input dir's second parquet file is corrupt: the request
+    // plans off the first file's footer and fails in its first job,
+    // after the operator has pinned and cached
+    def corrupt(dir: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val files = Files.list(java.nio.file.Paths.get(dir)).iterator.asScala.toSeq
+        .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
+      assert(files.size == 2, files)
+      Files.writeString(files.last, "not a parquet file")
+      Files.deleteIfExists(files.last.resolveSibling(s".${files.last.getFileName}.crc"))
+    }
+    val root = Files.createTempDirectory("qr_fail_").toString
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+      .repartition(2).write.parquet(s"$root/edges")
+    Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "u v w x y z"), (4L, "u v w x y q"))
+      .toDF("doc_id", "text").repartition(2).write.parquet(s"$root/docs")
+    corrupt(s"$root/edges")
+    corrupt(s"$root/docs")
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val server = new GraftServer(spark, root)
+    val port = server.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      for (req <- Seq(s"""{"op":"pagerank","edges":"$root/edges","iters":3}""",
+          s"""{"op":"split","docs":"$root/docs"}""")) {
+        val resp = client.send(
+          java.net.http.HttpRequest.newBuilder(
+              java.net.URI.create(s"http://127.0.0.1:$port/q"))
+            .POST(java.net.http.HttpRequest.BodyPublishers.ofString(req)).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode == 400 && resp.body.contains("error"),
+          s"$req -> ${resp.statusCode} ${resp.body}")
+        assert(spark.sparkContext.getPersistentRDDs.size == before,
+          s"$req stranded pinned RDDs")
+        assert(spark.sharedState.cacheManager.isEmpty, s"$req stranded cache entries")
+      }
+    } finally server.stop()
+  }
+
   /** A ZTable over two days with a null symbol, a decimal and an array
     * column: the value shapes a JSON reply has to render. */
   private def mkRichTable(): String = {

@@ -644,7 +644,7 @@ object ScaleStress {
               val pr = graft.operators.Graph.pagerank(edges, iters = 10,
                 onRound = (r, s) => rounds += (r -> s), pinEvery = 1)
               pr.count()
-              graft.operators.Graph.release(pr) // r11: unpersist can't see pins
+              graft.util.Pins.release(pr) // r11: unpersist can't see pins
             }
             val per = rounds.map { case (r, s) => f"r$r=$s%.2f" }.mkString(" ")
             println(f"STRESS g1x mult=$mult edges=$nE iters=10 total=$prT%.2fs $per")
@@ -656,7 +656,7 @@ object ScaleStress {
                 edges.select(col("src").as("a"), col("dst").as("b")), k = 5,
                 onRound = (r, s) => rounds += (r -> s))
               val s = kc.where(col("in_core")).count()
-              graft.operators.Graph.release(kc) // r11: unpersist can't see pins
+              graft.util.Pins.release(kc) // r11: unpersist can't see pins
               s
             }
             val per = rounds.map { case (r, s) => f"r$r=$s%.2f" }.mkString(" ")

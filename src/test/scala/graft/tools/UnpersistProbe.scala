@@ -18,8 +18,8 @@ object UnpersistProbe {
     println(s"after localCheckpoint: $n")
     pinned.unpersist(true)
     println(s"after Dataset.unpersist: $n")
-    graft.operators.Graph.release(pinned)
-    println(s"after Graph.release: $n")
+    graft.util.Pins.release(pinned)
+    println(s"after Pins.release: $n")
     val cached = base.persist()
     cached.count()
     println(s"after persist+count: $n")
