@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.language.implicitConversions
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,18 +24,65 @@ import graft.sources.Parquet
   * exact brute-force scan, which is how the parity spec gates
   * correctness of the whole path.
   *
-  * Centroid choice matches ivfNeighborPairs: the numCells vectors with
-  * the smallest xxhash64(id) — deterministic, no RNG. Norms are
+  * This is the one coarse quantizer of the ANN family:
+  * [[Similarity.ivfNeighborPairs]] mines pairs over the same
+  * [[centroids]] and [[assignCells]]. Centroids are the numCells vectors
+  * with the smallest xxhash64(id) — deterministic, no RNG. Norms are
   * precomputed at build time and stored (the "norm is a stored column at
   * 100 TB" note on cosinePairs, made real).
   */
 object IvfIndex {
 
-  private case class Centroid(cell: Long, vec: Array[Double], norm: Double)
+  private[operators] case class Centroid(cell: Long, vec: Array[Double], norm: Double)
 
-  /** Deterministic centroids + map-side cell assignment (shared with
-    * ivfNeighborPairs' logic; ordered so ties resolve identically). */
-  private def centroids(emb: DataFrame, idCol: String, vecCol: String,
+  /** How many cells a search reads: a fixed count ([[Cells]]; a bare Int
+    * converts to one), or the smallest centroid-ranked prefix that
+    * reaches a [[Recall]] target. */
+  sealed trait Probe
+  object Probe {
+    implicit def cells(n: Int): Probe = Cells(n)
+  }
+
+  /** Probe the `n` most query-similar cells; n = numCells ⇒ exact. */
+  final case class Cells(n: Int) extends Probe
+
+  /** Probe count derived from a RECALL TARGET instead of a fixed count:
+    * rank cells by centroid similarity, then probe the smallest prefix
+    * whose estimated share of the query's neighbor mass reaches
+    * `target`. The estimate weights cell i by exp(beta·(s_i − s_1)) — an
+    * exponential decay in the similarity margin to the best cell (a
+    * von-Mises-Fisher-style surrogate: neighbor density falls off
+    * exponentially in angular distance, so a cell whose centroid trails
+    * the best by margin δ holds ~e^(−βδ) as many of the query's near
+    * neighbors). An easy query (one dominant cell) probes 1-2 cells; a
+    * boundary query (flat margins) probes many — which is exactly the
+    * adaptivity a fixed count lacks.
+    * `beta` is the decay rate, calibrated so AVERAGE measured recall
+    * matches the target on an ISOTROPIC dim-64 cosine corpus — the
+    * worst case for cell concentration (measured over a 20-query panel
+    * at 16 cells: target 0.9 → avg recall 0.91/0.93 probing 11-12
+    * cells, target 0.8 → 0.78/0.83 probing ~9, at sf0.001/sf0.1;
+    * AdaptiveScan is the harness). Clustered real-world embeddings
+    * concentrate harder, so the same beta probes fewer cells there —
+    * but a beta calibrated for the isotropic worst case stays
+    * CONSERVATIVE on them: measured on a 16-cluster corpus
+    * (STRESS.md #5), beta 5 probed ~10/16 cells where beta 9-12
+    * probed 4-5/16 at recall 1.00. Beta is a corpus-separation
+    * parameter — and the default (NaN = auto) DERIVES it from the
+    * separation statistic the build persisted in `_stats.json`
+    * ([[betaFromSep]]): near-isotropic indexes serve at the
+    * conservative floor, clustered ones claim the measured ~2× probe
+    * pruning with no manual sweep. Pass beta explicitly to override;
+    * per-query recall varies around the target, as in any unverified
+    * ANN serving path. target = 1 probes every cell ⇒ exact. */
+  final case class Recall(target: Double, beta: Double = Double.NaN) extends Probe {
+    require(target > 0 && target <= 1, s"recallTarget must be in (0, 1], got $target")
+  }
+
+  /** The deterministic centroids: the `numCells` vectors with the
+    * smallest (xxhash64(id), id), sorted by cell so the first-max
+    * argmax resolves ties to the smallest cell. */
+  private[operators] def centroids(emb: DataFrame, idCol: String, vecCol: String,
       numCells: Int): Array[Centroid] =
     emb.orderBy(xxhash64(col(idCol)), col(idCol))
       .limit(numCells)
@@ -41,39 +90,38 @@ object IvfIndex {
       .collect()
       .map { r =>
         val cv = r.getSeq[Float](1).toArray.map(_.toDouble)
-        var nsq = 0.0
-        cv.foreach(x => nsq += x * x)
-        Centroid(r.getLong(0), cv, math.sqrt(nsq))
+        Centroid(r.getLong(0), cv, VectorOps.norm(cv))
       }
       .sortBy(_.cell)
 
-  /** Build the index directory: `cell=<id>/` parquet partitions holding
-    * (id, vec, vnorm), plus `_centroids.json`. One scan, zero shuffle —
-    * assignment is a codegen'd array-argmax over literal centroid
-    * vectors; the partitioned write distributes rows by cell value.
-    *
-    * `quantize = true` stores int8 codes + a per-vector scale INSTEAD of
-    * the float vector: probes then read ~1/4 the bytes — at 100 TB, ANN
-    * serving is scan-I/O-bound, so storage width is the lever that
-    * matters after partition pruning. Cell assignment still uses full
-    * precision; only storage (and therefore probe-time cosines, within
-    * ~1e-2) is approximate — SimilaritySpec bounds the recall and the
-    * cosine error. */
-  /** Map-side cell assignment: argmax of centroid cosine, ties to the
-    * first (lowest-cell) maximum — one codegen'd pass, zero shuffle. */
-  private def assignCells(emb: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Centroid], metaCols: Seq[String] = Nil): DataFrame = {
+  /** Map-side cell assignment over literal centroid vectors — one
+    * codegen'd pass, zero shuffle. Adds (id, vec, vnorm, metaCols…,
+    * cell). nProbe 1: the argmax of centroid cosine, ties to the first
+    * (smallest-cell) maximum. nProbe > 1: one row per cell among the
+    * top nProbe, from (sim, cell) structs sorted descending — ties to
+    * the larger cell. */
+  private[operators] def assignCells(emb: DataFrame, idCol: String, vecCol: String,
+      cents: Array[Centroid], metaCols: Seq[String] = Nil,
+      nProbe: Int = 1): DataFrame = {
     val cellIds = typedlit(cents.map(_.cell))
     val simCols = cents.map { c =>
       VectorOps.cosFrom(VectorOps.dot(col("vec"), typedlit(c.vec)),
         col("vnorm"), lit(c.norm))
     }
-    emb.select(Seq(col(idCol).as("id"), col(vecCol).as("vec"),
+    val scored = emb.select(Seq(col(idCol).as("id"), col(vecCol).as("vec"),
         sqrt(VectorOps.normSq(col(vecCol))).as("vnorm")) ++ metaCols.map(col): _*)
       .withColumn("sims", array(simCols.toIndexedSeq: _*))
-      .withColumn("cell",
-        element_at(cellIds, array_position(col("sims"), array_max(col("sims"))).cast("int")))
-      .drop("sims")
+    val assigned =
+      if (nProbe <= 1)
+        scored.withColumn("cell",
+          element_at(cellIds, array_position(col("sims"), array_max(col("sims"))).cast("int")))
+      else
+        scored.withColumn("probe",
+            explode(slice(reverse(array_sort(arrays_zip(col("sims"), cellIds.as("cid")))),
+              1, nProbe)))
+          .withColumn("cell", col("probe.cid"))
+          .drop("probe")
+    assigned.drop("sims")
   }
 
   private def writeCentroids(cents: Array[Centroid], path: String): Unit = {
@@ -110,9 +158,7 @@ object IvfIndex {
       .select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
     val margins = sample.map { qv =>
-      var qn = 0.0
-      qv.foreach(x => qn += x * x)
-      val qnorm = math.sqrt(qn)
+      val qnorm = VectorOps.norm(qv)
       var best = -2.0
       var second = -2.0
       cents.foreach { c =>
@@ -138,6 +184,18 @@ object IvfIndex {
       .map(_.group(1).toDouble)
   }
 
+  /** Build the index directory: `cell=<id>/` parquet partitions holding
+    * (id, vec, vnorm), plus `_centroids.json`. One scan, zero shuffle —
+    * assignment is a codegen'd array-argmax over literal centroid
+    * vectors; the partitioned write distributes rows by cell value.
+    *
+    * `quantize = true` stores int8 codes + a per-vector scale INSTEAD of
+    * the float vector: probes then read ~1/4 the bytes — at 100 TB, ANN
+    * serving is scan-I/O-bound, so storage width is the lever that
+    * matters after partition pruning. Cell assignment still uses full
+    * precision; only storage (and therefore probe-time cosines, within
+    * ~1e-2) is approximate — SimilaritySpec bounds the recall and the
+    * cosine error. */
   def build(emb: DataFrame, idCol: String, vecCol: String,
       numCells: Int, path: String, quantize: Boolean = false,
       metaCols: Seq[String] = Nil): Unit = {
@@ -192,59 +250,24 @@ object IvfIndex {
       .toArray
   }
 
-  /** Top-k by cosine against `queryVec`, probing the `nProbe` cells whose
-    * centroids are most query-similar. The cell ranking is k tiny dot
-    * products on the driver; the scan reads ONLY those cell directories
-    * (partition pruning — probeSpec asserts `PartitionFilters` carries
-    * the cell list); within them one codegen'd dot per row feeds
-    * TakeOrdered. nProbe = numCells ⇒ exact. */
+  /** Top-k by cosine against `queryVec`, probing the cells `nProbe`
+    * picks ([[Cells]] — an Int converts — or a [[Recall]] target). The
+    * cell ranking is k tiny dot products on the driver; the scan reads
+    * ONLY those cell directories (partition pruning — probeSpec asserts
+    * `PartitionFilters` carries the cell list); within them one
+    * codegen'd dot per row feeds TakeOrdered. Probing every cell ⇒
+    * exact. */
   def search(spark: SparkSession, path: String, queryVec: Array[Double],
-      k: Int, nProbe: Int, excludeId: Option[Long] = None,
+      k: Int, nProbe: Probe, excludeId: Option[Long] = None,
       filter: Option[Column] = None): DataFrame = {
     val (probed, qnorm) = probeCells(path, queryVec, nProbe)
     scanCells(spark, path, probed, queryVec, qnorm, k, excludeId, filter)
   }
 
-  /** [[search]] with the probe count derived from a RECALL TARGET
-    * instead of a fixed nProbe: rank cells by centroid similarity, then
-    * probe the smallest prefix whose estimated share of the query's
-    * neighbor mass reaches `recallTarget`. The estimate weights cell i
-    * by exp(beta·(s_i − s_1)) — an exponential decay in the similarity
-    * margin to the best cell (a von-Mises-Fisher-style surrogate:
-    * neighbor density falls off exponentially in angular distance, so a
-    * cell whose centroid trails the best by margin δ holds ~e^(−βδ) as
-    * many of the query's near neighbors). An easy query (one dominant
-    * cell) probes 1-2 cells; a boundary query (flat margins) probes
-    * many — which is exactly the adaptivity a fixed nProbe lacks.
-    * `beta` is the decay rate, calibrated so AVERAGE measured recall
-    * matches the target on an ISOTROPIC dim-64 cosine corpus — the
-    * worst case for cell concentration (measured over a 20-query panel
-    * at 16 cells: target 0.9 → avg recall 0.91/0.93 probing 11-12
-    * cells, target 0.8 → 0.78/0.83 probing ~9, at sf0.001/sf0.1;
-    * AdaptiveScan is the harness). Clustered real-world embeddings
-    * concentrate harder, so the same beta probes fewer cells there —
-    * but a beta calibrated for the isotropic worst case stays
-    * CONSERVATIVE on them: measured on a 16-cluster corpus
-    * (STRESS.md #5), beta 5 probed ~10/16 cells where beta 9-12
-    * probed 4-5/16 at recall 1.00. Beta is a corpus-separation
-    * parameter — and the default (NaN = auto) now DERIVES it from the
-    * separation statistic the build persisted in `_stats.json`
-    * ([[betaFromSep]]): near-isotropic indexes serve at the
-    * conservative floor, clustered ones claim the measured ~2× probe
-    * pruning with no manual sweep. Pass beta explicitly to override;
-    * per-query recall varies around the target, as in any unverified
-    * ANN serving path. recallTarget = 1 probes every cell ⇒ exact. */
-  def searchAdaptive(spark: SparkSession, path: String, queryVec: Array[Double],
-      k: Int, recallTarget: Double, excludeId: Option[Long] = None,
-      beta: Double = Double.NaN): DataFrame = {
-    val (probed, qnorm) = adaptiveProbeCells(path, queryVec, recallTarget, beta)
-    scanCells(spark, path, probed, queryVec, qnorm, k, excludeId)
-  }
-
-  /** The probe-execution half of [[search]]/[[searchAdaptive]]:
-    * scan exactly `probed` cell directories, rank by cosine, top-k.
-    * Package-visible so a caller that already ranked cells (e.g. to
-    * report the probe count) doesn't pay the centroid ranking twice. */
+  /** The probe-execution half of [[search]]: scan exactly `probed` cell
+    * directories, rank by cosine, top-k. Package-visible so a caller
+    * that already ranked cells (e.g. to report the probe count) doesn't
+    * pay the centroid ranking twice. */
   private[graft] def scanCells(spark: SparkSession, path: String,
       probed: Array[Long], queryVec: Array[Double], qnorm: Double, k: Int,
       excludeId: Option[Long], filter: Option[Column] = None): DataFrame = {
@@ -258,10 +281,9 @@ object IvfIndex {
       if (filtered.columns.contains("codes"))
         VectorOps.dot(typedlit(queryVec), col("codes")) * col("scale")
       else VectorOps.dot(col("vec"), typedlit(queryVec))
-    filtered
-      .select(col("id"), VectorOps.cosFrom(dot, col("vnorm"), lit(qnorm)).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    Similarity.top(
+      filtered.select(col("id"), VectorOps.cosFrom(dot, col("vnorm"), lit(qnorm)).as("cos")),
+      "cos", k)
   }
 
   /** Append new vectors to an existing IVF-PQ index: assignment and
@@ -292,14 +314,32 @@ object IvfIndex {
         col("cell"))
   }
 
-  /** Rank the `nProbe` most query-similar cells driver-side (k tiny dot
-    * products against the centroid sidecar). Package-visible so the
-    * spec can assert partial-probe results equal brute force restricted
-    * to exactly these cells. */
+  /** The cells `nProbe` picks, ranked driver-side (k tiny dot products
+    * against the centroid sidecar): the first n for [[Cells]], the
+    * smallest prefix whose exp(beta·margin) mass share reaches the
+    * target for [[Recall]] (`beta = NaN` auto-calibrates via
+    * [[resolveBeta]]). Package-visible so the spec can assert
+    * partial-probe results equal brute force restricted to exactly
+    * these cells. */
   private[graft] def probeCells(path: String, queryVec: Array[Double],
-      nProbe: Int): (Array[Long], Double) = {
+      nProbe: Probe): (Array[Long], Double) = {
     val (ranked, qnorm) = rankCells(path, queryVec)
-    (ranked.take(nProbe).map(_._1), qnorm)
+    val probed = nProbe match {
+      case Cells(n) => n
+      case Recall(target, beta) =>
+        val b = resolveBeta(path, beta)
+        val top = ranked.head._2
+        val ws = ranked.map { case (_, s) => math.exp(b * (s - top)) }
+        val total = ws.sum
+        var acc = 0.0
+        var n = 0
+        while (n < ranked.length && acc / total < target) {
+          acc += ws(n)
+          n += 1
+        }
+        n
+    }
+    (ranked.take(probed).map(_._1), qnorm)
   }
 
   /** The isotropic serving floor for the adaptive decay rate: the value
@@ -348,34 +388,11 @@ object IvfIndex {
     if (!beta.isNaN) beta
     else loadSep(path).map(betaFromSep).getOrElse(BetaIso)
 
-  /** Adaptive probe selection (see [[searchAdaptive]]): smallest
-    * similarity-ranked prefix whose exp(beta·margin) mass share reaches
-    * `recallTarget`. `beta = NaN` auto-calibrates via [[resolveBeta]]. */
-  private[graft] def adaptiveProbeCells(path: String, queryVec: Array[Double],
-      recallTarget: Double, beta: Double = Double.NaN): (Array[Long], Double) = {
-    require(recallTarget > 0 && recallTarget <= 1,
-      s"recallTarget must be in (0, 1], got $recallTarget")
-    val b = resolveBeta(path, beta)
-    val (ranked, qnorm) = rankCells(path, queryVec)
-    val top = ranked.head._2
-    val ws = ranked.map { case (_, s) => math.exp(b * (s - top)) }
-    val total = ws.sum
-    var acc = 0.0
-    var n = 0
-    while (n < ranked.length && acc / total < recallTarget) {
-      acc += ws(n)
-      n += 1
-    }
-    (ranked.take(n).map(_._1), qnorm)
-  }
-
   /** All cells ranked by query-centroid cosine (desc, cell-id tiebreak):
     * k tiny driver-side dot products against the sidecar. */
   private def rankCells(path: String,
       queryVec: Array[Double]): (Array[(Long, Double)], Double) = {
-    var qn = 0.0
-    queryVec.foreach(x => qn += x * x)
-    val qnorm = math.sqrt(qn)
+    val qnorm = VectorOps.norm(queryVec)
     val ranked = loadCentroids(path)
       .map { c =>
         var d = 0.0
@@ -387,57 +404,25 @@ object IvfIndex {
     (ranked, qnorm)
   }
 
-  /** IVF-PQ top-k: probe the `nProbe` best cells, ADC-rank ONLY the
+  /** IVF-PQ top-k: probe the cells `nProbe` picks, ADC-rank ONLY the
     * m-byte code column within them ([[Pq.adcCosine]] — two LUT-sum
-    * expressions, no vector touched), take `candidates`, exact-verify
-    * those at full width against the base table `emb`. Candidate I/O is
-    * `(nProbe/numCells) · (m+8)/(4·dim+8)` of a brute-force scan — both
-    * ANN levers compounded — and the rerank touches `candidates` rows.
-    * nProbe = numCells degrades to PQ-only ([[Pq.topK]] semantics), which
-    * is how the sim10 gate shares sim1's exact oracle. */
+    * expressions, no vector touched), take `candidates`, and
+    * [[Similarity.rerank]] those at full width against the base table
+    * `emb`. Candidate I/O is `(probed/numCells) · (m+8)/(4·dim+8)` of a
+    * brute-force scan — both ANN levers compounded — and the rerank
+    * touches `candidates` rows. A full probe degrades to PQ-only
+    * ([[Pq.topK]] semantics), which is how the sim10 gate shares sim1's
+    * exact oracle. */
   def searchPq(spark: SparkSession, path: String, emb: DataFrame,
-      idCol: String, vecCol: String, queryId: Long, k: Int, nProbe: Int,
+      idCol: String, vecCol: String, queryId: Long, k: Int, nProbe: Probe,
       candidates: Int): DataFrame = {
-    val qv = emb.where(col(idCol) === queryId).select(col(vecCol))
-      .head.getSeq[Float](0).toArray.map(_.toDouble)
-    searchPqCells(spark, path, emb, idCol, vecCol, queryId, k, candidates,
-      qv, probeCells(path, qv, nProbe)._1)
-  }
-
-  /** [[searchPq]] with the probe count derived from a recall target via
-    * [[adaptiveProbeCells]] — same mass model as [[searchAdaptive]],
-    * composed with the PQ/ADC rerank. */
-  def searchPqAdaptive(spark: SparkSession, path: String, emb: DataFrame,
-      idCol: String, vecCol: String, queryId: Long, k: Int,
-      recallTarget: Double, candidates: Int,
-      beta: Double = Double.NaN): DataFrame = {
-    val qv = emb.where(col(idCol) === queryId).select(col(vecCol))
-      .head.getSeq[Float](0).toArray.map(_.toDouble)
-    searchPqCells(spark, path, emb, idCol, vecCol, queryId, k, candidates,
-      qv, adaptiveProbeCells(path, qv, recallTarget, beta)._1)
-  }
-
-  private def searchPqCells(spark: SparkSession, path: String, emb: DataFrame,
-      idCol: String, vecCol: String, queryId: Long, k: Int, candidates: Int,
-      qv: Array[Double], probed: Array[Long]): DataFrame = {
+    val qv = Similarity.queryVector(emb, idCol, vecCol, queryId)
     val model = Pq.load(Paths.get(path, "_pq.json"))
-    val cand = Parquet.read(spark, path)
-      .where(col("cell").isin(probed.toIndexedSeq: _*))
+    val scored = Parquet.read(spark, path)
+      .where(col("cell").isin(probeCells(path, qv, nProbe)._1.toIndexedSeq: _*))
       .where(col("id") =!= queryId)
       .select(col("id"), Pq.adcCosine(col("pq_codes"), model, qv).as("acos"))
-      .orderBy(col("acos").desc, col("id"))
-      .limit(candidates)
-      .select(col("id"))
-    // exact verify with bruteForceTopK's arithmetic — identical ops, so
-    // a full probe with enough candidate headroom hash-gates on sim1
-    val q = emb.where(col(idCol) === queryId)
-      .select(transform(col(vecCol), _.cast("double")).as("qv"))
-    emb.join(broadcast(cand), emb(idCol) === cand("id"))
-      .join(broadcast(q))
-      .select(col("id"),
-        Similarity.cosine(transform(col(vecCol), _.cast("double")), col("qv"))
-          .as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    Similarity.rerank(emb, idCol, vecCol, queryId, k,
+      Some(Similarity.top(scored, "acos", candidates).select(col("id"))))
   }
 }

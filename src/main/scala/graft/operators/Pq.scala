@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.PqOps
+import graft.plans.{PqOps, VectorOps}
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the compressed-domain half of the
@@ -121,7 +121,7 @@ object Pq {
     * are disjoint, so |v̂|² = Σ_s |c_{s,code_s}|² exactly). No vector
     * column is touched. */
   def adcCosine(codeCol: Column, model: Model, query: Array[Double]): Column = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
+    val qn = VectorOps.norm(query)
     val dotLut = Array.tabulate(model.m) { s =>
       val qs = query.slice(s * model.subDim, (s + 1) * model.subDim)
       model.books(s).map { c =>
@@ -131,41 +131,24 @@ object Pq {
         d
       }
     }
-    val normLut = Array.tabulate(model.m)(s => model.books(s).map { c =>
-      var n = 0.0
-      c.foreach(x => n += x * x)
-      n
-    })
+    val normLut = Array.tabulate(model.m)(s => model.books(s).map(VectorOps.normSq))
     PqOps.lutSum(codeCol, dotLut) /
       (sqrt(PqOps.lutSum(codeCol, normLut)) * lit(qn))
   }
 
   /** Top-k by exact cosine, with candidate generation in CODE space:
     * rank the corpus by ADC cosine reading only the m-byte code column,
-    * take `candidates`, then score just those at full width — the sim8
-    * candidates-then-verify shape with 8-16× narrower candidate I/O.
-    * Deterministic model ⇒ stable candidate set ⇒ the caller can gate
-    * against the exact-oracle top-k (sim9). */
+    * take `candidates`, then [[Similarity.rerank]] just those at full
+    * width — the sim8 candidates-then-verify shape with 8-16× narrower
+    * candidate I/O. Deterministic model ⇒ stable candidate set ⇒ the
+    * caller can gate against the exact-oracle top-k (sim9). */
   def topK(emb: DataFrame, idCol: String, vecCol: String, model: Model,
       queryId: Long, k: Int, candidates: Int): DataFrame = {
-    val enc = encode(emb, vecCol, model).select(col(idCol).as("id"), col("pq_codes"))
-    val qv = emb.where(col(idCol) === queryId).select(col(vecCol))
-      .head.getSeq[Float](0).toArray.map(_.toDouble)
-    val cand = enc.where(col("id") =!= queryId)
+    val qv = Similarity.queryVector(emb, idCol, vecCol, queryId)
+    val scored = encode(emb, vecCol, model).select(col(idCol).as("id"), col("pq_codes"))
+      .where(col("id") =!= queryId)
       .select(col("id"), adcCosine(col("pq_codes"), model, qv).as("acos"))
-      .orderBy(col("acos").desc, col("id"))
-      .limit(candidates)
-      .select(col("id"))
-    // exact verify with Similarity.cosine's arithmetic — identical ops
-    // to bruteForceTopK, so sim9 shares sim1's oracle
-    val q = emb.where(col(idCol) === queryId)
-      .select(transform(col(vecCol), _.cast("double")).as("qv"))
-    emb.join(broadcast(cand), emb(idCol) === cand("id"))
-      .join(broadcast(q))
-      .select(col("id"),
-        Similarity.cosine(transform(col(vecCol), _.cast("double")), col("qv"))
-          .as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    Similarity.rerank(emb, idCol, vecCol, queryId, k,
+      Some(Similarity.top(scored, "acos", candidates).select(col("id"))))
   }
 }

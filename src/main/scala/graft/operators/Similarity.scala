@@ -10,22 +10,26 @@ import graft.util.Pins
 
 /** Similarity search over an embedding column (Array[Float]).
   *
-  * Three tiers, by threshold regime:
+  * Every approximate strategy here is one skeleton: the strategy
+  * supplies candidates, and code written once verifies them exactly.
   *
-  *  - `bruteForceTopK`: single scan + broadcast query vector +
-  *    TakeOrdered — the per-query baseline, scales linearly.
-  *  - `cosinePairs`: EXACT all-pairs mining at an arbitrary threshold.
-  *    Exact loose-threshold mining is inherently Θ(N²) dot products (at
-  *    cos ≥ 0.45 the angle budget is ~63°; no hashing scheme prunes
-  *    subquadratically with recall ≈ 1 there — band-hit rate p ≈ 0.65
-  *    vs bucket prune 2^-r never closes). What CAN scale is the shape:
-  *    a block-pair equi-join shards the quadratic work evenly across the
-  *    cluster with bounded task memory, instead of the broadcast
-  *    nested-loop cross join (full-table broadcast = driver/executor OOM
-  *    at 100 TB) it replaces.
-  *  - `lshNeighborPairs` / `ivfNeighborPairs`: approximate candidates for
-  *    the TIGHT-threshold regime (real near-dup, cos ≥ 0.9, where a few
-  *    hyperplanes give high recall). Recall < 1 by construction;
+  *  - Top-k for one query id. A strategy scores the corpus in a cheap
+  *    space ([[rpTopK]]'s random projection, [[sqTopK]]'s SQ8 codes,
+  *    [[Pq.topK]]'s PQ codes, [[IvfIndex.searchPq]]'s probed PQ cells),
+  *    keeps its best `candidates` with [[top]], and [[rerank]] scores
+  *    that shortlist at full width against the broadcast query vector.
+  *    [[bruteForceTopK]] is the rerank with no shortlist; [[topKBatch]]
+  *    serves many query ids in one scan with bounded heaps.
+  *  - Pairs at a cosine threshold. [[cosinePairs]] is EXACT: loose
+  *    thresholds are inherently Θ(N²) dot products (at cos ≥ 0.45 the
+  *    angle budget is ~63°, and no hashing scheme prunes
+  *    subquadratically with recall ≈ 1 there), so what scales is the
+  *    shape — a block-pair equi-join that shards the quadratic work
+  *    evenly with bounded task memory, never a broadcast nested loop.
+  *    The approximate miners for the TIGHT regime ([[lshNeighborPairsMulti]]
+  *    hyperplane buckets, [[ivfNeighborPairs]] coarse cells) emit only
+  *    candidate id pairs, and [[verifyPairs]] joins the vectors in once
+  *    per side for the exact cosine. Recall < 1 by construction;
   *    SimilaritySpec gates measured recall against the exact pair set.
   *
   * Hyperplane components are derived from xxhash64(seed, dim) —
@@ -48,20 +52,50 @@ object Similarity {
 
   private[graft] def toDouble(c: Column): Column = transform(c, _.cast(DoubleType))
 
-  /** Brute-force top-k by cosine against the vector of `queryId`.
-    * The 1-row query side is broadcast; compiles to scan + TakeOrdered. */
+  /** Brute-force top-k by cosine against the vector of `queryId`: the
+    * exact [[rerank]] over the whole corpus. Compiles to scan +
+    * broadcast query row + TakeOrdered. */
   def bruteForceTopK(
       emb: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int): DataFrame = {
+      queryId: Long, k: Int): DataFrame =
+    rerank(emb, idCol, vecCol, queryId, k)
+
+  /** The one score ordering of the top-k family: `score` descending,
+    * ties to the smaller `id`, first `n` rows — one TakeOrdered. A
+    * strategy's shortlist is `top(scored, score, candidates)` over rows
+    * that already exclude the query id, so the limit never spends a
+    * slot on the query itself. */
+  private[graft] def top(df: DataFrame, score: String, n: Int): DataFrame =
+    df.orderBy(col(score).desc, col("id")).limit(n)
+
+  /** The exact rerank every top-k strategy ends in: [[cosine]] at full
+    * width against the broadcast query vector, then [[top]]. The
+    * arithmetic is sim1's, so a shortlist that holds the true top-k
+    * returns sim1's rows bit for bit. `shortlist` holds candidate ids in
+    * an `id` column (broadcast — it is `candidates` rows); without one
+    * the whole corpus minus the query is scored. */
+  private[graft] def rerank(emb: DataFrame, idCol: String, vecCol: String,
+      queryId: Long, k: Int, shortlist: Option[DataFrame] = None): DataFrame = {
     val q = emb.where(col(idCol) === queryId)
       .select(toDouble(col(vecCol)).as("qv"))
-    emb.where(col(idCol) =!= queryId)
+    val scored = shortlist
+      .fold(emb.where(col(idCol) =!= queryId))(ids =>
+        emb.join(broadcast(ids), emb(idCol) === ids("id")))
       .join(broadcast(q))
       .select(col(idCol).as("id"),
         cosine(toDouble(col(vecCol)), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    top(scored, "cos", k)
   }
+
+  /** The vector of `queryId`, fetched to the driver as doubles (one
+    * job). An id that is not in the corpus is the caller's error and is
+    * reported as one. */
+  private[graft] def queryVector(emb: DataFrame, idCol: String, vecCol: String,
+      queryId: Long): Array[Double] =
+    emb.where(col(idCol) === queryId).select(toDouble(col(vecCol)))
+      .head(1).headOption.map(_.getSeq[Double](0).toArray)
+      .getOrElse(throw new IllegalArgumentException(
+        s"query id $queryId is not in column $idCol (vectors: $vecCol)"))
 
   /** Batch multi-query top-k: serve Q query vectors in ONE table scan.
     *
@@ -87,9 +121,7 @@ object Similarity {
       .collect()
       .map { case (qid, vf) =>
         val qv = vf.map(_.toDouble)
-        var nsq = 0.0
-        qv.foreach(x => nsq += x * x)
-        (qid, qv, math.sqrt(nsq))
+        (qid, qv, VectorOps.norm(qv))
       }
       .sortBy(_._1)
     val bc = spark.sparkContext.broadcast(queries)
@@ -104,17 +136,15 @@ object Similarity {
         val heaps = qs.map(_ =>
           new scala.collection.mutable.PriorityQueue[(Double, Long)]()(worstFirst))
         it.foreach { case (id, vf) =>
-          var nsq = 0.0
-          var i = 0
-          while (i < vf.length) { val x = vf(i).toDouble; nsq += x * x; i += 1 }
-          val nrm = math.sqrt(nsq)
+          val v = vf.map(_.toDouble)
+          val nrm = VectorOps.norm(v)
           var qi = 0
           while (qi < qs.length) {
             val (qid, qv, qnorm) = qs(qi)
             if (id != qid) {
               var dot = 0.0
               var d = 0
-              while (d < vf.length) { dot += vf(d).toDouble * qv(d); d += 1 }
+              while (d < v.length) { dot += v(d) * qv(d); d += 1 }
               val cos = VectorOps.cosScalar(dot, nrm, qnorm)
               val h = heaps(qi)
               if (h.size < k) h.enqueue((cos, id))
@@ -304,14 +334,23 @@ object Similarity {
       if (knownN >= 0) knownN else emb.count(),
       numPlanes, numTables, threshold, multiProbe,
       candidateBudget, autoSize, targetRecall)
-    val vecs = emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"),
+    verifyPairs(lshCandidates(emb, idCol, vecCol, planes, tables, multiProbe),
+      emb, idCol, vecCol, threshold)
+  }
+
+  /** The exact verify every approximate pair miner ends in: candidate
+    * (ida, idb) pairs, each emitted once, join the vectors in once per
+    * side, and the pair is kept when its cosine reaches `threshold`.
+    * The candidate stage carries ids only, so the collision mass never
+    * shuffles dim-width payloads. DotProduct widens float elements to
+    * double exactly, so the raw vector column needs no cast. */
+  private[graft] def verifyPairs(cands: DataFrame, emb: DataFrame,
+      idCol: String, vecCol: String, threshold: Double): DataFrame = {
+    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       sqrt(VectorOps.normSq(col(vecCol))).as("nrm"))
-    val cands = lshCandidates(emb, idCol, vecCol, planes, tables, multiProbe)
-    cands
-      .join(vecs.select(col("id").as("ida"), col("v").as("va"),
-        col("nrm").as("nrm_a")), Seq("ida"))
-      .join(vecs.select(col("id").as("idb"), col("v").as("vb"),
-        col("nrm").as("nrm_b")), Seq("idb"))
+    def side(s: String) = vecs.select(col("id").as(s"id$s"),
+      col("v").as(s"v$s"), col("nrm").as(s"nrm_$s"))
+    cands.join(side("a"), Seq("ida")).join(side("b"), Seq("idb"))
       .select(col("ida"), col("idb"),
         VectorOps.cosFrom(VectorOps.dot(col("va"), col("vb")),
           col("nrm_a"), col("nrm_b")).as("cos"))
@@ -391,13 +430,11 @@ object Similarity {
       .select(col("ida"), col("idb"))
   }
 
-  /** IVF-style ANN: a deterministic coarse quantizer — the k vectors with
-    * the smallest xxhash64(id) act as centroids (no RNG, stable across
-    * runs); assignment is MAP-SIDE: the k centroid similarities are an
-    * array expression over literal centroid vectors and the argmax is
-    * `array_position(sims, array_max(sims))` — zero shuffle, unlike a
-    * `row_number().over(partitionBy(id))` which would shuffle N×k scored
-    * rows just to take an argmax. Candidate pairs are searched within
+  /** IVF-style ANN: [[IvfIndex]]'s deterministic coarse quantizer —
+    * the k vectors with the smallest xxhash64(id) act as centroids (no
+    * RNG, stable across runs), and assignment is MAP-SIDE over literal
+    * centroid vectors (zero shuffle, unlike a `row_number()` argmax that
+    * would shuffle N×k scored rows). Candidate pairs are searched within
     * cells only (one shuffle on cell id). The k-row centroid collect is
     * dimension-sized plan-time setup, same class as a broadcast dim.
     * Recall < 1 by construction (cell-boundary neighbors are missed);
@@ -406,59 +443,16 @@ object Similarity {
     * mass, recall approaches 1 as nProbe→numCells). */
   def ivfNeighborPairs(emb: DataFrame, idCol: String, vecCol: String,
       numCells: Int, threshold: Double, nProbe: Int = 1): DataFrame = {
-    val cents = emb
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(numCells)
-      .select(col(idCol).as("cell"), col(vecCol).as("cv"))
-      .collect()
-      .map { r =>
-        val cv = r.getSeq[Float](1).toArray.map(_.toDouble)
-        // left-to-right double accumulation, matching VectorOps.normSq
-        var nsq = 0.0
-        cv.foreach(x => nsq += x * x)
-        (r.getLong(0), cv, math.sqrt(nsq))
-      }
-      .sortBy(_._1) // cell-ascending: first-max tie-break = smallest cell
-    val cellIds = typedlit(cents.map(_._1))
-    val simCols = cents.map { case (_, cv, cnorm) =>
-      VectorOps.cosFrom(VectorOps.dot(col("v"), typedlit(cv)),
-        col("vnorm"), lit(cnorm))
-    }
-    val scored = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        sqrt(VectorOps.normSq(col(vecCol))).as("vnorm"))
-      .withColumn("sims", array(simCols.toIndexedSeq: _*))
-    val assigned =
-      if (nProbe <= 1)
-        scored.withColumn("cell",
-          element_at(cellIds, array_position(col("sims"), array_max(col("sims"))).cast("int")))
-          .select(col("id"), col("v"), col("vnorm"), col("cell"))
-      else
-        // top-nProbe cells: sort (sim, cell) structs descending, slice,
-        // explode — nProbe bucket rows per vector, all map-side
-        scored.withColumn("probe",
-          explode(slice(reverse(array_sort(arrays_zip(col("sims"), cellIds.as("cid")))),
-            1, nProbe)))
-          .select(col("id"), col("v"), col("vnorm"), col("probe.cid").as("cell"))
-    // CANDIDATES, then VERIFY (same shape as lshNeighborPairsMulti):
+    val assigned = IvfIndex.assignCells(emb, idCol, vecCol,
+      IvfIndex.centroids(emb, idCol, vecCol, numCells), nProbe = nProbe)
     // the cell self-join carries only ids; multi-probe duplicates are
-    // distinct'd while the rows are still two longs — BEFORE the dot
-    // products — then the vectors join in once per side for the one
-    // exact verification each candidate pays.
+    // distinct'd while the rows are still two longs — before any dot
     val a = assigned.select(col("id").as("ida"), col("cell"))
     val b = assigned.select(col("id").as("idb"), col("cell"))
-    val cands0 = a.join(b, Seq("cell")).where(col("ida") < col("idb"))
+    val cands = a.join(b, Seq("cell")).where(col("ida") < col("idb"))
       .select(col("ida"), col("idb"))
-    val cands = if (nProbe <= 1) cands0 else cands0.distinct()
-    val vecs = scored.select(col("id"), col("v"), col("vnorm"))
-    cands
-      .join(vecs.select(col("id").as("ida"), col("v").as("va"),
-        col("vnorm").as("norm_a")), Seq("ida"))
-      .join(vecs.select(col("id").as("idb"), col("v").as("vb"),
-        col("vnorm").as("norm_b")), Seq("idb"))
-      .select(col("ida"), col("idb"),
-        VectorOps.cosFrom(VectorOps.dot(col("va"), col("vb")),
-          col("norm_a"), col("norm_b")).as("cos"))
-      .where(col("cos") >= threshold)
+    verifyPairs(if (nProbe <= 1) cands else cands.distinct(),
+      emb, idCol, vecCol, threshold)
   }
 
   /** Distributed Lloyd k-means over the embedding column.
@@ -510,20 +504,13 @@ object Similarity {
     def rounded[T](r: Int)(f: => T): T =
       graft.util.Timing.rounded(onRound, r)(f)
     def unit(c: Array[Double]): Array[Double] = {
-      var n = 0.0
-      c.foreach(x => n += x * x)
-      val s = math.sqrt(n)
+      val s = VectorOps.norm(c)
       if (s > 0) c.map(_ / s) else c
     }
     val prepped = unitPrep(emb, idCol, vecCol, spherical)
     // reused k init rounds + iters times — cache instead of rescanning
     val base = Pins.cache(prepped.select(col(idCol).as("id"), col(vecCol).as("vf"),
         VectorOps.normSq(col(vecCol)).as("vnormsq")))
-    def dist2(c: Array[Double]): Column = {
-      var cn = 0.0
-      c.foreach(x => cn += x * x)
-      col("vnormsq") - lit(2.0) * VectorOps.dot(col("vf"), typedlit(c)) + lit(cn)
-    }
     var cs: Array[Array[Double]] = rounded(0) { init match {
       case "hash" =>
         // k-means||-style oversampled seeding in ONE job: TakeOrdered
@@ -582,7 +569,7 @@ object Similarity {
           .select(col("vf")).head.getSeq[Float](0).toArray.map(_.toDouble)
         val cents = scala.collection.mutable.ArrayBuffer(seed)
         while (cents.size < k) {
-          val minD = cents.map(dist2).reduce(least(_, _))
+          val minD = cents.map(sqDist).reduce(least(_, _))
           val next = base.orderBy(minD.desc, col("id"))
             .select(col("vf")).head.getSeq[Float](0).toArray.map(_.toDouble)
           cents += next
@@ -591,7 +578,7 @@ object Similarity {
     } }
     val seeds = cs.map(_.clone())
     for (r <- 1 to iters) rounded(r) {
-      val byCell = kmeansAssign(base.drop("id"), "vf", cs)
+      val byCell = kmeansAssign(base.drop("id"), cs)
         .select(col("cell"), col("vf")).as[(Int, Array[Float])]
         .groupByKey(_._1)
         .agg(graft.functions.VecCentroid.toColumn.name("c"))
@@ -632,26 +619,24 @@ object Similarity {
   def kmeansSseDistributed(emb: DataFrame, idCol: String, vecCol: String,
       cs: Array[Array[Double]], spherical: Boolean = true): Double = {
     val prepped = unitPrep(emb, idCol, vecCol, spherical)
-    val d2s = cs.map { c =>
-      var cn = 0.0
-      c.foreach(x => cn += x * x)
-      col("vnormsq") - lit(2.0) * VectorOps.dot(col("vf"), typedlit(c)) + lit(cn)
-    }
     prepped.select(col(vecCol).as("vf"), VectorOps.normSq(col(vecCol)).as("vnormsq"))
-      .select(array_min(array(d2s.toIndexedSeq: _*)).as("d"))
+      .select(array_min(array(cs.map(sqDist).toIndexedSeq: _*)).as("d"))
       .agg(sum(col("d")))
       .head.getDouble(0)
   }
 
+  /** Squared euclidean distance from the `vf` vector column to literal
+    * centroid `c`: |v|² − 2v·c + |c|², with |v|² read from `vnormsq` —
+    * one codegen'd dot per centroid. */
+  private def sqDist(c: Array[Double]): Column =
+    col("vnormsq") - lit(2.0) * VectorOps.dot(col("vf"), typedlit(c)) +
+      lit(VectorOps.normSq(c))
+
   /** Map-side hard assignment to the nearest centroid (1-based cell =
-    * centroid index + 1). Input needs `vnormsq`; adds `cell`. */
-  private def kmeansAssign(withNorm: DataFrame, vecCol: String,
+    * centroid index + 1). Input needs `vf` and `vnormsq`; adds `cell`. */
+  private def kmeansAssign(withNorm: DataFrame,
       cs: Array[Array[Double]]): DataFrame = {
-    val d2s = cs.map { c =>
-      var cn = 0.0
-      c.foreach(x => cn += x * x)
-      col("vnormsq") - lit(2.0) * VectorOps.dot(col(vecCol), typedlit(c)) + lit(cn)
-    }
+    val d2s = cs.map(sqDist)
     withNorm.withColumn("cell",
       array_position(array(d2s.toIndexedSeq: _*),
         array_min(array(d2s.toIndexedSeq: _*))).cast("int"))
@@ -662,8 +647,7 @@ object Similarity {
       cs: Array[Array[Double]]): DataFrame =
     kmeansAssign(
       emb.select(col(idCol).as("id"), col(vecCol).as("vf"),
-        VectorOps.normSq(col(vecCol)).as("vnormsq")),
-      "vf", cs)
+        VectorOps.normSq(col(vecCol)).as("vnormsq")), cs)
       .select(col("id"), col("cell"))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -696,7 +680,7 @@ object Similarity {
     val bc = spark.sparkContext.broadcast(cs)
     kmeansAssign(
         emb.select(col(idCol).as("id"), col(vecCol).as("vf"),
-          VectorOps.normSq(col(vecCol)).as("vnormsq")), "vf", cs)
+          VectorOps.normSq(col(vecCol)).as("vnormsq")), cs)
       .select(col("cell"), col("id"), col("vf"))
       .as[(Int, Long, Array[Float])]
       .groupByKey(_._1)
@@ -708,12 +692,9 @@ object Similarity {
           s
         }
         val members = it.map { case (_, id, vf) =>
-          val u = new Array[Double](vf.length)
-          var n = 0.0
-          var i = 0
-          while (i < vf.length) { val x = vf(i).toDouble; u(i) = x; n += x * x; i += 1 }
-          val s = math.sqrt(n)
-          if (s > 0) { i = 0; while (i < u.length) { u(i) /= s; i += 1 } }
+          val u = vf.map(_.toDouble)
+          val s = VectorOps.norm(u)
+          if (s > 0) { var i = 0; while (i < u.length) { u(i) /= s; i += 1 } }
           (id, u, dot(u, c))
         }.toArray.sortBy { case (id, _, cc) => (cc, id) }
         val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
@@ -725,30 +706,6 @@ object Similarity {
         }.toIndexedSeq
       }
       .toDF("id", "cell", "kept", "witness")
-  }
-
-  /** LSH-bucketed ANN: group vectors into hyperplane buckets, search
-    * candidate pairs only within buckets. Recall < 1 by construction;
-    * SimilaritySpec measures it against the exact pair set. Single-table
-    * variant of [[lshNeighborPairsMulti]]; the same candidate-mass guard
-    * applies (fail-fast only — auto-sizing needs tables to buy recall
-    * back, so infeasible requests are routed to the multi-table entry
-    * point by the error message rather than silently re-planned). */
-  def lshNeighborPairs(emb: DataFrame, idCol: String, vecCol: String,
-      numPlanes: Int, threshold: Double,
-      candidateBudget: Long = DefaultCandidateBudget,
-      knownN: Long = -1L): DataFrame = {
-    guardBanding("lshNeighborPairs",
-      if (knownN >= 0) knownN else emb.count(), numPlanes, numTables = 1,
-      threshold, multiProbe = false, candidateBudget,
-      autoSize = false, targetRecall = 0.9)
-    val withBucket = emb.select(col(idCol).as("id"),
-      toDouble(col(vecCol)).as("v"), lshBucket(col(vecCol), numPlanes).as("bucket"))
-    val a = withBucket.select(col("id").as("ida"), col("v").as("va"), col("bucket"))
-    val b = withBucket.select(col("id").as("idb"), col("v").as("vb"), col("bucket"))
-    a.join(b, Seq("bucket")).where(col("ida") < col("idb"))
-      .select(col("ida"), col("idb"), cosine(col("va"), col("vb")).as("cos"))
-      .where(col("cos") >= threshold)
   }
 
   /** Per-dimension [min, max] quantization range for SCALAR (int8)
@@ -800,23 +757,15 @@ object Similarity {
       transform(col("code"), (c, i) =>
         element_at(mnL, i + 1) + c.cast(DoubleType) * element_at(dL, i + 1))
         .as("vhat"))
-    val q = emb.where(col(idCol) === queryId)
-      .select(toDouble(col(vecCol)).as("qv"))
-    val qv = q.head.getSeq[Double](0).toArray
+    val qv = queryVector(emb, idCol, vecCol, queryId)
     // query norm is constant across rows — dividing by ||vhat|| alone
     // preserves the candidate order
-    val cand = deq.where(col("id") =!= queryId)
+    val scored = deq.where(col("id") =!= queryId)
       .select(col("id"),
         VectorOps.cosFrom(VectorOps.dot(col("vhat"), typedlit(qv)),
           sqrt(VectorOps.normSq(col("vhat"))), lit(1d)).as("acos"))
-      .orderBy(col("acos").desc, col("id"))
-      .limit(candidates)
-      .select(col("id"))
-    emb.join(broadcast(cand), emb(idCol) === cand("id"))
-      .join(broadcast(q))
-      .select(col("id"), cosine(toDouble(col(vecCol)), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    rerank(emb, idCol, vecCol, queryId, k,
+      Some(top(scored, "acos", candidates).select(col("id"))))
   }
 
   /** Deterministic sparse-sign random projection planes (Achlioptas-
@@ -855,19 +804,11 @@ object Similarity {
       candidates: Int = 100): DataFrame = {
     val proj = randomProject(emb, idCol, vecCol, outDim)
     val qp = proj.where(col("id") === queryId).select(col("rvec").as("qr"))
-    val cand = proj.where(col("id") =!= queryId)
+    val scored = proj.where(col("id") =!= queryId)
       .join(broadcast(qp))
       .select(col("id"), cosine(col("rvec"), col("qr")).as("rcos"))
-      .orderBy(col("rcos").desc, col("id"))
-      .limit(candidates)
-      .select(col("id"))
-    val q = emb.where(col(idCol) === queryId)
-      .select(toDouble(col(vecCol)).as("qv"))
-    emb.join(broadcast(cand), emb(idCol) === cand("id"))
-      .join(broadcast(q))
-      .select(col("id"), cosine(toDouble(col(vecCol)), col("qv")).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
+    rerank(emb, idCol, vecCol, queryId, k,
+      Some(top(scored, "rcos", candidates).select(col("id"))))
   }
 
   /** A sign-LSH banding sized for a corpus: `planes`/`tables` for

@@ -443,6 +443,18 @@ object VectorOps {
 
   def normSq(a: Column): Column = dot(a, a)
 
+  /** Driver-side twin of [[normSq]]: Σ x², accumulated left to right in
+    * double, so a collected vector's norm is bit-identical to the
+    * column's. */
+  def normSq(v: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    s
+  }
+
+  def norm(v: Array[Double]): Double = math.sqrt(normSq(v))
+
   /** Zero-norm-safe cosine from a precomputed dot and the two norms:
     * a zero-norm vector is DEFINED orthogonal to everything (cos = 0),
     * so it never crosses a positive threshold and sorts last under

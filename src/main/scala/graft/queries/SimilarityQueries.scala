@@ -85,8 +85,7 @@ object SimilarityQueries {
       .toString + "/idx"
     graft.operators.IvfIndex.build(emb, "vec_id", "embedding",
       numCells = 16, path, metaCols = Seq("label"))
-    val qv = emb.where(col("vec_id") === 0L).select(col("embedding"))
-      .head.getSeq[Float](0).toArray.map(_.toDouble)
+    val qv = Similarity.queryVector(emb, "vec_id", "embedding", 0L)
     graft.operators.IvfIndex.search(spark, path, qv, k = 10, nProbe = 16,
         excludeId = Some(0L), filter = Some(col("label") === 3))
       .select(col("id"), round(col("cos"), 6).as("cos_r"))
@@ -218,8 +217,7 @@ object SimilarityQueries {
       .toString + "/idx"
     graft.operators.IvfIndex.build(emb, "vec_id", "embedding",
       numCells = 16, path)
-    val qv = emb.where(col("vec_id") === 0L).select(col("embedding"))
-      .head.getSeq[Float](0).toArray.map(_.toDouble)
+    val qv = Similarity.queryVector(emb, "vec_id", "embedding", 0L)
     graft.operators.IvfIndex.search(spark, path, qv, k = 10, nProbe = 16,
         excludeId = Some(0L))
       .select(col("id"), round(col("cos"), 6).as("cos_r"))
@@ -383,11 +381,11 @@ object SimilarityQueries {
     * artifact (fingerprint-keyed like the sim2/sim3 truth sets — a
     * serving system builds once and answers many queries), and each of
     * the 10 panel queries is answered by [[graft.operators.IvfIndex
-    * .searchAdaptive]] probing only the smallest centroid-ranked cell
-    * prefix whose estimated neighbor-mass share reaches the 0.95
-    * target — strictly fewer than all 16 cell directories (pruned_ok
-    * asserts it for every query; partition pruning reaching the scan is
-    * PlanSpec-pinned). The gate is measured panel recall@10 against the
+    * .search]] with a [[graft.operators.IvfIndex.Recall]] probe: only
+    * the smallest centroid-ranked cell prefix whose estimated
+    * neighbor-mass share reaches the 0.95 target — strictly fewer than
+    * all 16 cell directories (pruned_ok asserts it for every query;
+    * partition pruning reaching the scan is PlanSpec-pinned). The gate is measured panel recall@10 against the
     * persisted exact-top-10 truth fixture: >= [[PrunedRecallBound]],
     * set below the measured floor (see the bound's doc) so the flag
     * tests "adaptive pruning did not collapse recall", not run noise —
@@ -425,10 +423,10 @@ object SimilarityQueries {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val served = Await.result(Future.sequence(ServePanel.map { qid => Future {
       val qv = qvs(qid)
-      // rank cells ONCE; scanCells executes the same probe searchAdaptive
-      // would, without re-ranking the centroid sidecar
-      val (cells, qnorm) = graft.operators.IvfIndex.adaptiveProbeCells(
-        idxPath, qv, PrunedRecallTarget, beta = PrunedBeta)
+      // rank cells ONCE; scanCells executes the same probe search would,
+      // without re-ranking the centroid sidecar
+      val (cells, qnorm) = graft.operators.IvfIndex.probeCells(idxPath, qv,
+        graft.operators.IvfIndex.Recall(PrunedRecallTarget, beta = PrunedBeta))
       val got = graft.operators.IvfIndex.scanCells(spark, idxPath, cells,
           qv, qnorm, k = 10, excludeId = Some(qid))
         .select(col("id")).collect().map(_.getLong(0))
@@ -443,7 +441,7 @@ object SimilarityQueries {
   }
 
   /** Adaptive-probe mass-share target for sim14 (see
-    * IvfIndex.searchAdaptive's calibration notes). Beta stays PINNED at
+    * IvfIndex.Recall's calibration notes). Beta stays PINNED at
     * 5 here — one cell more conservative than this corpus's
     * auto-calibrated 5.2-5.5 (IvfIndex.betaFromSep from the build-time
     * separation stat; the auto path is the library default and is
@@ -615,9 +613,7 @@ object SimilarityQueries {
       .collect()
       .map { r =>
         val cv = r.getSeq[Float](1).toArray.map(_.toDouble)
-        var nsq = 0.0
-        cv.foreach(x => nsq += x * x)
-        (r.getLong(0), cv, math.sqrt(nsq))
+        (r.getLong(0), cv, graft.plans.VectorOps.norm(cv))
       }
       .sortBy(_._1)
     val cellIds = typedlit(cents.map(_._1))

@@ -129,7 +129,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("ida", "idb").collect()
         .map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb"))).toSet
     val exact = pairSet(Similarity.cosinePairs(emb, "vec_id", "embedding", 0.3))
-    val lsh = pairSet(Similarity.lshNeighborPairs(emb, "vec_id", "embedding", 6, 0.3))
+    val lsh = pairSet(Similarity.lshNeighborPairsMulti(emb, "vec_id", "embedding", 6, numTables = 1, 0.3))
     val ivf = pairSet(Similarity.ivfNeighborPairs(emb, "vec_id", "embedding", 16, 0.3))
     assert(lsh.subsetOf(exact), s"LSH emitted ${(lsh -- exact).size} false pairs")
     assert(ivf.subsetOf(exact), s"IVF emitted ${(ivf -- exact).size} false pairs")
@@ -219,7 +219,7 @@ class SimilaritySpec extends SparkSpec {
       df.select("ida", "idb").collect()
         .map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb"))).toSet
     val exact = pairSet(Similarity.cosinePairs(emb, "vec_id", "embedding", 0.3))
-    val one = pairSet(Similarity.lshNeighborPairs(emb, "vec_id", "embedding", 6, 0.3))
+    val one = pairSet(Similarity.lshNeighborPairsMulti(emb, "vec_id", "embedding", 6, numTables = 1, 0.3))
     val multi = pairSet(Similarity.lshNeighborPairsMulti(emb, "vec_id", "embedding", 6, 16, 0.3))
     assert(multi.subsetOf(exact), "amplified LSH emitted false pairs")
     assert(multi.size > one.size, s"amplification ${one.size} -> ${multi.size}")
@@ -365,7 +365,7 @@ class SimilaritySpec extends SparkSpec {
     assert(got.subsetOf(exact), "auto-sized banding emitted false pairs")
     // the single-table variant shares the gate (fail-fast only)
     intercept[IllegalArgumentException] {
-      Similarity.lshNeighborPairs(emb, "vec_id", "embedding", 2, 0.3,
+      Similarity.lshNeighborPairsMulti(emb, "vec_id", "embedding", 2, numTables = 1, 0.3,
         candidateBudget = 100L)
     }
   }
@@ -454,7 +454,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH buckets: identical vectors collide; pairs found at threshold") {
-    val pairs = Similarity.lshNeighborPairs(vecs, "vec_id", "embedding", 6, 0.99)
+    val pairs = Similarity.lshNeighborPairsMulti(vecs, "vec_id", "embedding", 6, numTables = 1, 0.99)
       .collect().map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb"))).toSet
     assert(pairs.contains((0L, 4L))) // identical vectors always same bucket
   }
@@ -675,6 +675,79 @@ class SimilaritySpec extends SparkSpec {
     assert(got == brute)
   }
 
+  test("a query id missing from the corpus fails with IllegalArgumentException naming it") {
+    import graft.operators.{IvfIndex, Pq}
+    val toy = Seq.tabulate(8)(i =>
+        (i.toLong, Array.tabulate(4)(d => ((i * 7 + d * 3) % 5 - 2).toFloat)))
+      .toDF("vec_id", "embedding")
+    val model = Pq.train(toy, "vec_id", "embedding", m = 2, ksub = 2, iters = 1)
+    val path = java.nio.file.Files.createTempDirectory("ivfpq_missing_spec_")
+      .toString + "/idx"
+    IvfIndex.buildPq(toy, "vec_id", "embedding", numCells = 2, path, model)
+    val strategies = Seq[(String, () => Any)](
+      "sqTopK" -> (() => Similarity.sqTopK(toy, "vec_id", "embedding", 99L, 3,
+        candidates = 4, dim = 4)),
+      "Pq.topK" -> (() => Pq.topK(toy, "vec_id", "embedding", model, 99L, 3,
+        candidates = 4)),
+      "searchPq" -> (() => IvfIndex.searchPq(spark, path, toy, "vec_id", "embedding",
+        99L, 3, nProbe = 2, candidates = 4)))
+    strategies.foreach { case (name, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("99") && e.getMessage.contains("vec_id"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("work counters: each ANN strategy starts a pinned number of jobs (sf0.001)") {
+    // build + collect, counted with jobsStarted; each count held in five
+    // fresh sessions. A change to the shared skeleton that adds a job (a
+    // second query fetch, a lost broadcast) fails here before it shows
+    // in a bench
+    import graft.operators.{IvfIndex, Pq}
+    val emb = graft.Tables.embeddings(spark, sf001)
+    def jobs(f: => org.apache.spark.sql.DataFrame): Int = jobsStarted(f.collect())._2
+    val model = Pq.train(emb, "vec_id", "embedding", m = 16, ksub = 16, iters = 2)
+    val path = java.nio.file.Files.createTempDirectory("ivfpq_jobs_spec_")
+      .toString + "/idx"
+    IvfIndex.buildPq(emb, "vec_id", "embedding", numCells = 16, path, model)
+    val counts = Map(
+      "sim3 ivfNeighborPairs" -> jobs(Similarity.ivfNeighborPairs(emb, "vec_id",
+        "embedding", numCells = 16, threshold = 0.3, nProbe = 6)),
+      "sim8 rpTopK" -> jobs(Similarity.rpTopK(emb, "vec_id", "embedding", 0L, 10,
+        outDim = 32, candidates = 300)),
+      "sim9 Pq.topK" -> jobs(Pq.topK(emb, "vec_id", "embedding", model, 0L, 10,
+        candidates = 300)),
+      "sim10 searchPq" -> jobs(IvfIndex.searchPq(spark, path, emb, "vec_id",
+        "embedding", 0L, 10, nProbe = 16, candidates = 300)),
+      "sim12 sqTopK" -> jobs(Similarity.sqTopK(emb, "vec_id", "embedding", 0L, 10,
+        candidates = 300)))
+    assert(counts == Map("sim3 ivfNeighborPairs" -> 5, "sim8 rpTopK" -> 4,
+      "sim9 Pq.topK" -> 4, "sim10 searchPq" -> 4, "sim12 sqTopK" -> 6), counts)
+  }
+
+  test("lint: cosine-score orderings in graft.operators go through Similarity.top") {
+    import java.nio.file.{Files, Path, Paths}
+    val ops = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(ops), s"run from the repository root: $ops")
+    // a literal score column ordered descending forks the top-k
+    // skeleton; topKBatch's per-query window is the one ordering that
+    // is not a TakeOrdered
+    val literal = """col\("(cos|acos|rcos)"\)\.desc""".r
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(ops)
+    val offenders = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { (p: Path) =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if literal.findFirstIn(line).isDefined &&
+              !line.contains("Window.partitionBy(\"qid\")") => s"$p:${i + 1}"
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty,
+      s"order cosine scores through Similarity.top: ${offenders.mkString(", ")}")
+  }
+
   test("IvfIndex: partial probe prunes partitions and equals brute force over probed cells") {
     import graft.operators.IvfIndex
     val emb = graft.Tables.embeddings(spark, sf001)
@@ -728,9 +801,9 @@ class SimilaritySpec extends SparkSpec {
       val full = IvfIndex.search(spark, path, qv, 10, numCells,
           excludeId = Some(qid))
         .collect().map(_.getAs[Long]("id")).toSet
-      val (cells, _) = IvfIndex.adaptiveProbeCells(path, qv, 0.9)
+      val (cells, _) = IvfIndex.probeCells(path, qv, IvfIndex.Recall(0.9))
       cellsProbed += cells.length
-      val got = IvfIndex.searchAdaptive(spark, path, qv, 10, 0.9,
+      val got = IvfIndex.search(spark, path, qv, 10, IvfIndex.Recall(0.9),
           excludeId = Some(qid))
         .collect().map(_.getAs[Long]("id")).toSet
       recallSum += (got & full).size / 10.0
@@ -743,7 +816,7 @@ class SimilaritySpec extends SparkSpec {
     // a flat target of 1.0 must degrade to the exact full probe
     val qv0 = emb.where(col("vec_id") === 0L).select(col("embedding"))
       .head.getSeq[Float](0).toArray.map(_.toDouble)
-    assert(IvfIndex.adaptiveProbeCells(path, qv0, 1.0)._1.length == numCells)
+    assert(IvfIndex.probeCells(path, qv0, IvfIndex.Recall(1.0))._1.length == numCells)
     // IVF-PQ composition: adaptive at target 1.0 == fixed full probe
     val pqPath = java.nio.file.Files.createTempDirectory("ivfpq_adapt_spec_")
       .toString + "/idx"
@@ -752,8 +825,8 @@ class SimilaritySpec extends SparkSpec {
     IvfIndex.buildPq(emb, "vec_id", "embedding", 8, pqPath, model)
     val fixed = IvfIndex.searchPq(spark, pqPath, emb, "vec_id", "embedding",
       0L, 10, nProbe = 8, candidates = 300).collect().map(_.getAs[Long]("id")).toSeq
-    val adapt = IvfIndex.searchPqAdaptive(spark, pqPath, emb, "vec_id", "embedding",
-      0L, 10, recallTarget = 1.0, candidates = 300).collect().map(_.getAs[Long]("id")).toSeq
+    val adapt = IvfIndex.searchPq(spark, pqPath, emb, "vec_id", "embedding",
+      0L, 10, IvfIndex.Recall(1.0), candidates = 300).collect().map(_.getAs[Long]("id")).toSeq
     assert(adapt == fixed)
   }
 
@@ -792,10 +865,10 @@ class SimilaritySpec extends SparkSpec {
     var recallSum = 0.0
     panel.foreach { qid =>
       val qv = qvs(qid)
-      probed += IvfIndex.adaptiveProbeCells(cluIdx, qv, 0.95)._1.length
+      probed += IvfIndex.probeCells(cluIdx, qv, IvfIndex.Recall(0.95))._1.length
       val full = IvfIndex.search(spark, cluIdx, qv, 10, 16,
         excludeId = Some(qid)).collect().map(_.getAs[Long]("id")).toSet
-      val got = IvfIndex.searchAdaptive(spark, cluIdx, qv, 10, 0.95,
+      val got = IvfIndex.search(spark, cluIdx, qv, 10, IvfIndex.Recall(0.95),
         excludeId = Some(qid)).collect().map(_.getAs[Long]("id")).toSet
       recallSum += (got & full).size / 10.0
     }

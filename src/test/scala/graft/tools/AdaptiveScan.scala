@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.IvfIndex
 
-/** Calibration harness for IvfIndex.searchAdaptive's beta: for a panel
+/** Calibration harness for IvfIndex.Recall's beta: for a panel
   * of query ids, measures cells probed and recall@10 vs the full-probe
   * (exact) result at several (target, beta) settings.
   * `sbt "Test/runMain graft.tools.AdaptiveScan"` */
@@ -41,10 +41,10 @@ object AdaptiveScan {
             val full = IvfIndex.search(spark, path, qv, 10, numCells,
                 excludeId = Some(qid))
               .collect().map(_.getAs[Long]("id")).toSet
-            val (cells, _) = IvfIndex.adaptiveProbeCells(path, qv, target, beta)
+            val (cells, _) = IvfIndex.probeCells(path, qv, IvfIndex.Recall(target, beta))
             totCells += cells.length
-            val got = IvfIndex.searchAdaptive(spark, path, qv, 10, target,
-                excludeId = Some(qid), beta = beta)
+            val got = IvfIndex.search(spark, path, qv, 10, IvfIndex.Recall(target, beta),
+                excludeId = Some(qid))
               .collect().map(_.getAs[Long]("id")).toSet
             val r = (got & full).size / 10.0
             totRecall += r

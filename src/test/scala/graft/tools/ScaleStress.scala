@@ -419,9 +419,9 @@ object ScaleStress {
           val (_, serveT) = timed {
             panel.foreach { qid =>
               val qv = qvs(qid)
-              probed += IvfIndex.adaptiveProbeCells(idx, qv, 0.95, 5.0)._1.length
-              IvfIndex.searchAdaptive(spark, idx, qv, 10, 0.95,
-                excludeId = Some(qid), beta = 5.0).count()
+              probed += IvfIndex.probeCells(idx, qv, IvfIndex.Recall(0.95, 5.0))._1.length
+              IvfIndex.search(spark, idx, qv, 10, IvfIndex.Recall(0.95, 5.0),
+                excludeId = Some(qid)).count()
             }
           }
           println(f"STRESS sim14 mult=$mult vecs=$nVecs cells=$cells " +
@@ -455,14 +455,14 @@ object ScaleStress {
             .toMap
           val (_, serveT) = timed {
             panel.foreach { qid =>
-              IvfIndex.searchPqAdaptive(spark, idx, emb, "vec_id", "embedding",
-                qid, 10, recallTarget = 0.95, candidates = 300).count()
+              IvfIndex.searchPq(spark, idx, emb, "vec_id", "embedding",
+                qid, 10, IvfIndex.Recall(0.95), candidates = 300).count()
             }
           }
           // probe accounting OUTSIDE the serve timing, same auto-beta path
           var probed = 0
           panel.foreach { qid =>
-            probed += IvfIndex.adaptiveProbeCells(idx, qvs(qid), 0.95)._1.length
+            probed += IvfIndex.probeCells(idx, qvs(qid), IvfIndex.Recall(0.95))._1.length
           }
           println(f"STRESS sim10 mult=$mult vecs=$nVecs cells=$cells " +
             f"train=$trainT%.2fs build=$buildT%.2fs serve10=$serveT%.2fs " +
@@ -497,8 +497,8 @@ object ScaleStress {
           val (_, serveT) = timed {
             panel.foreach { qid =>
               val qv = qvs(qid)
-              probed += IvfIndex.adaptiveProbeCells(idx, qv, 0.95)._1.length
-              got(qid) = IvfIndex.searchAdaptive(spark, idx, qv, 10, 0.95,
+              probed += IvfIndex.probeCells(idx, qv, IvfIndex.Recall(0.95))._1.length
+              got(qid) = IvfIndex.search(spark, idx, qv, 10, IvfIndex.Recall(0.95),
                   excludeId = Some(qid))
                 .collect().map(_.getAs[Long]("id")).toSet
             }
@@ -523,12 +523,12 @@ object ScaleStress {
             var recallSum = 0.0
             panel.foreach { qid =>
               val qv = qvs(qid)
-              probedB += IvfIndex.adaptiveProbeCells(idx, qv, 0.95, beta)._1.length
+              probedB += IvfIndex.probeCells(idx, qv, IvfIndex.Recall(0.95, beta))._1.length
               val full = IvfIndex.search(spark, idx, qv, 10, 16,
                   excludeId = Some(qid))
                 .collect().map(_.getAs[Long]("id")).toSet
-              val got = IvfIndex.searchAdaptive(spark, idx, qv, 10, 0.95,
-                  excludeId = Some(qid), beta = beta)
+              val got = IvfIndex.search(spark, idx, qv, 10, IvfIndex.Recall(0.95, beta),
+                  excludeId = Some(qid))
                 .collect().map(_.getAs[Long]("id")).toSet
               recallSum += (got & full).size / 10.0
             }

@@ -44,12 +44,12 @@ object Sim14Measure {
         var cellsTot = 0
         panel.foreach { qid =>
           val qv = qvs(qid)
-          val (cells, _) = IvfIndex.adaptiveProbeCells(path, qv, 0.95, beta = 5.0)
+          val (cells, _) = IvfIndex.probeCells(path, qv, IvfIndex.Recall(0.95, beta = 5.0))
           cellsMin = math.min(cellsMin, cells.length)
           cellsMax = math.max(cellsMax, cells.length)
           cellsTot += cells.length
-          val got = IvfIndex.searchAdaptive(spark, path, qv, 10, 0.95,
-              excludeId = Some(qid), beta = 5.0)
+          val got = IvfIndex.search(spark, path, qv, 10, IvfIndex.Recall(0.95, beta = 5.0),
+              excludeId = Some(qid))
             .collect().map(_.getAs[Long]("id"))
           hits += got.count(truth(qid).contains)
         }
